@@ -1,0 +1,5 @@
+"""Seeded end-to-end benchmark of the engine's public surface.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""
