@@ -372,7 +372,7 @@ def should_run_rep(
     return spread_bad or not converged
 
 
-def _clear_engine_caches(spark) -> None:
+def _clear_engine_caches(spark, notes: list[str]) -> None:
     """Drop every cross-QUERY relation cache before a timed headline
     row (r14, VERDICT r13 #5/#9): operators/dedup.py memoizes the
     persisted shingle relation per (plan, args) so that e.g. q76's
@@ -384,26 +384,28 @@ def _clear_engine_caches(spark) -> None:
     execution (pagerank's ew, q141's oriented edges) are untouched —
     they materialize and die within the row that pays for them.
     Methodology change recorded in OPTIMIZATION_r14.md with the old
-    numbers kept (q73/q76/dedup_minhash_lsh are the affected rows)."""
-    try:
-        from gpu_olap_engine_spark.operators import dedup as D  # noqa: PLC0415
+    numbers kept (q73/q76/dedup_minhash_lsh are the affected rows).
 
-        for df in list(D._SHINGLE_CACHE.values()):
-            df.unpersist()
-        D._SHINGLE_CACHE.clear()
-        rc = getattr(D, "_RELATION_CACHE", None)
-        if rc is not None:
-            for df in list(rc.values()):
-                df.unpersist()
-            rc.clear()
-        from gpu_olap_engine_spark.operators import similarity as S  # noqa: PLC0415
+    Each step runs on its own: a failing step is written to `notes`
+    and the remaining steps still run (cache hygiene must never kill
+    the bench, nor hide that it did not happen)."""
+    from gpu_olap_engine_spark.operators import dedup as D  # noqa: PLC0415
+    from gpu_olap_engine_spark.operators import similarity as S  # noqa: PLC0415
 
-        for df in list(S._KEYED_CACHE.values()):
+    def drop(cache: dict) -> None:
+        for df in list(cache.values()):
             df.unpersist()
-        S._KEYED_CACHE.clear()
-        spark.catalog.clearCache()
-    except Exception:  # noqa: BLE001
-        pass  # cache hygiene must never kill the bench
+        cache.clear()
+
+    for step, fn in (
+        ("dedup._SHINGLE_CACHE", lambda: drop(D._SHINGLE_CACHE)),
+        ("similarity._KEYED_CACHE", lambda: drop(S._KEYED_CACHE)),
+        ("catalog.clearCache", spark.catalog.clearCache),
+    ):
+        try:
+            fn()
+        except Exception as e:  # noqa: BLE001
+            notes.append(f"cache clear {step}: {type(e).__name__}")
 
 
 def _stderr_tail(path: str, lines: int = 30, chars: int = 3000) -> str:
@@ -1267,7 +1269,7 @@ def main() -> None:
         state["notes"].append(f"warmup done {time.monotonic() - t_start:.0f}s")
         for name in HEADLINE:
             try:
-                _clear_engine_caches(spark)
+                _clear_engine_caches(spark, state["notes"])
                 t0 = time.perf_counter()
                 df = registry[name].fn(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()

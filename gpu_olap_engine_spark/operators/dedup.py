@@ -1,18 +1,18 @@
 """Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
 Everything here is expressed with built-in Spark SQL functions (no
-Python UDFs): tokenize -> shingle -> hash -> min-aggregate -> band ->
-self-join. The hash chain is engine-agnostic (md5 -> 60-bit int ->
-affine permutations mod a Mersenne prime) so the DuckDB oracle can
-reproduce signatures bit-for-bit — see queries/dedup.py for the SQL
-twins built from the same constants.
+Python UDFs): tokenize -> shingle -> hash -> min -> band -> self-join.
+The hash chain is engine-agnostic (md5 -> 60-bit int -> affine
+permutations mod a Mersenne prime) so the DuckDB oracle can reproduce
+signatures bit-for-bit — see queries/dedup.py for the SQL twins built
+from the same constants.
 
-Scale design: the LSH band join is the standard sub-quadratic path —
-candidates are generated by an equi-join on (band_index, band_key),
-which shuffles on the band key instead of comparing all O(n^2) pairs.
-Verification joins only candidate pairs against the shingle inverted
-index. Skewed bands (giant clusters) are handled by AQE skew-join at
-runtime.
+Scale design: MinHash-LSH derives each document's shingle set and
+signature inside its own row (minhash_docs), so the only shuffles are
+the LSH band join — an equi-join on (band_index, band_key) instead of
+comparing all O(n^2) pairs — and the verify joins of candidate pairs
+to their documents on the document id. Skewed bands (giant clusters)
+are handled by AQE skew-join at runtime.
 """
 
 from __future__ import annotations
@@ -20,10 +20,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Shingle cache keyed by (input plan, id/text cols, k): repeated
-# dedup calls over the same corpus (q55, q70, dedup_clusters,
-# dedup_minhash_lsh in one session) share ONE persisted shingle
-# relation instead of churning persist/unpersist. Bounded; evicting
+# Shingle cache keyed by (input plan, id/text cols, k): the exploded
+# (id, shingle) consumers over one corpus — ngram_jaccard_pairs,
+# ngram_containment_pairs, q76's 3-gram ratio and q73's 8-gram
+# decontamination in one session — share ONE persisted shingle
+# relation instead of churning persist/unpersist. MinHash-LSH is not
+# a consumer: it works on per-document arrays. Bounded; evicting
 # an entry only unpersists it — lineage stays valid, so any
 # still-unevaluated result that referenced it just recomputes
 # (slower, never wrong). Guarded by a lock: the driver may execute
@@ -102,6 +104,28 @@ def base_hash(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
+def _shingle_array(words: Column, k: int) -> Column:
+    """Distinct k-word shingles of a token-array column; a document
+    shorter than k words is one shingle, its whole (joined) text.
+
+    ``words`` must be a materialized column, not an expression (r12):
+    interpreted higher-order lambdas do not CSE, so slice(tokenize(
+    text), i, k) inside the lambda re-ran the split() once per shingle
+    POSITION; against the attribute it runs once per document. The
+    array is deduped in place: duplicates can only occur within one
+    document, so array_distinct gives exact set semantics with zero
+    shuffle."""
+    return F.array_distinct(
+        F.when(
+            F.size(words) >= k,
+            F.transform(
+                F.sequence(F.lit(1), F.size(words) - (k - 1)),
+                lambda i: F.concat_ws(" ", F.slice(words, i, k)),
+            ),
+        ).otherwise(F.array(F.concat_ws(" ", words)))
+    )
+
+
 def shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """Distinct k-word shingles per document: (id, shingle).
 
@@ -111,28 +135,11 @@ def shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame
     """
     from gpu_olap_engine_spark.queries.tables import spread
 
-    df = spread(df)
-    # materialize the token array as a column first (r12): interpreted
-    # higher-order lambdas do not CSE, so slice(tokenize(text), i, k)
-    # inside the lambda re-ran the split() once per shingle POSITION;
-    # against the materialized attribute it runs once per document
-    base = df.select(
+    base = spread(df).select(
         F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("w")
     )
-    words = F.col("w")
-    sh = F.when(
-        F.size(words) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(words, i, k)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    # dedupe INSIDE the array before exploding: duplicates can only
-    # occur within one document, so array_distinct gives exact
-    # (id, shingle) set semantics with zero shuffle — a full
-    # .distinct() exchange here would be pure waste at 100 TB
     return base.select(
-        "id", F.explode(F.array_distinct(sh)).alias("shingle")
+        "id", F.explode(_shingle_array(F.col("w"), k)).alias("shingle")
     )
 
 
@@ -197,69 +204,89 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_verify(shingle_df: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs:
-    (id_a, id_b, jaccard).
+def minhash_docs(
+    df: DataFrame, id_col: str, text_col: str, k: int = 3,
+    extra_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """(id, *extra_cols, sh, mh_0..mh_{n-1}): one row per document with
+    its distinct shingle array and MinHash signature.
 
-    Candidate-driven: expand each candidate pair by side-a shingles,
-    then equi-join side-b's shingle set on (id_b, shingle). Cost is
-    O(|candidates| * shingles-per-doc) — proportional to what LSH
-    surfaced, never the all-pairs inverted-index blowup. A candidate
-    pair with zero overlap drops out of the inner join, which is
-    correct: its jaccard is 0 and cannot pass any threshold.
-
-    r14 (guide §3.2, the q141 lesson): both expansion joins pin a
-    shuffled-hash build — the first builds on the candidate-PAIR
-    side and streams the shingle relation; the second builds on the
-    (id_b, shingle)-keyed shingle partitions and streams the
-    candidate x shingle fan-out (the relation that grows
-    super-linearly with candidate volume). SortMergeJoin sorted that
-    fan-out; hash builds are |input|/P per task and AQE skew-splits
-    still apply. Paired A/B at sf1: 5.28 -> 4.08 s min (5/5 reps,
-    identical rows); hinting ONLY the second join was measured WORSE
-    than baseline (7.17) — the win needs the pair-side build too.
-    sf0.1 is a wash (1.28 vs 1.39 min), sf10 under load favored the
-    hinted form 3/4 pairings (scripts/r14_ab_minhash_shj.py).
+    Array-native twin of minhash_signatures(shingles(...)), with
+    identical signatures: the shingle hash is computed ONCE per
+    shingle into an array column, then each permutation is one
+    array_min(transform(...)) over it — no explode, no shuffle, no
+    re-aggregation. ``hv`` is a separate projection for the same no-CSE
+    reason as the token array (12 lambdas over md5 would re-hash 12
+    times); Catalyst keeps it un-collapsed because it is referenced
+    more than once. Ids must be unique: each input row is one document.
     """
-    sizes = shingle_df.groupBy("id").agg(F.count("*").alias("n"))
-    sh_a = shingle_df.withColumnRenamed("id", "id_a")
-    sh_b = shingle_df.withColumnRenamed("id", "id_b")
-    inter = (
-        pairs.hint("SHUFFLE_HASH").join(sh_a, "id_a")
-        .join(sh_b.hint("SHUFFLE_HASH"), ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
+    from gpu_olap_engine_spark.queries.tables import spread
+
+    keep = ["id", *extra_cols]
+    base = spread(df).select(
+        F.col(id_col).alias("id"), *extra_cols,
+        tokenize(F.col(text_col)).alias("w"),
     )
-    return (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
+    hashed = base.select(
+        *keep, _shingle_array(F.col("w"), k).alias("sh")
+    ).withColumn(
+        "hv", F.transform("sh", lambda s: base_hash(s) % MINHASH_P)
+    )
+    return hashed.select(
+        *keep, "sh",
+        *[
+            F.array_min(
+                F.transform("hv", lambda x: (F.lit(a) * x + F.lit(b)) % MINHASH_P)
+            ).alias(f"mh_{i}")
+            for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
+        ],
+    )
+
+
+def jaccard_verify(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact shingle-set Jaccard for candidate pairs:
+    (id_a, id_b, jaccard), from minhash_docs' per-document arrays.
+
+    Candidate-driven: each pair picks up side a's and side b's shingle
+    arrays by two equi-joins on the document id, and the intersection
+    is size(array_intersect(...)) inside the row. Cost is
+    O(|candidates| * shingles-per-doc), proportional to what LSH
+    surfaced; both joins shuffle on a document id, so nothing caps
+    parallelism. A zero-overlap pair gets jaccard 0; callers drop it
+    with any positive threshold."""
+    a = docs.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = docs.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    n_inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    return pairs.join(a, "id_a").join(b, "id_b").select(
+        "id_a",
+        "id_b",
+        (
+            n_inter.cast("double")
+            / (F.size("sh_a") + F.size("sh_b") - n_inter)
+        ).alias("jaccard"),
     )
 
 
 def minhash_dedup_pairs(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, threshold: float = 0.5
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: shingle -> sign -> band ->
-    candidate join -> exact-Jaccard verify -> threshold.
+    """Full MinHash-LSH near-dup pipeline: shingle and sign per
+    document -> band -> candidate join -> exact-Jaccard verify ->
+    threshold.
 
-    The shingle relation feeds three consumers (signatures, verify
-    side a, verify side b); it is persisted AND memoized per input
-    (_shingles_cached) so the tokenize+explode+distinct work runs once
-    per corpus even across the session's many dedup entry points. At
-    100 TB the equivalent is materializing the shingle table to
-    storage once per corpus snapshot.
+    The per-document relation (minhash_docs) is one narrow projection
+    over the spread input, consumed by the band self-join and by both
+    verify joins. Nothing is persisted: the spread exchange it starts
+    from is reused by every consumer, and there is no exploded
+    shingle relation to shuffle. A candidate pair with zero overlap
+    never passes (the inner-join verify this replaced dropped it), even
+    at threshold 0.
     """
-    sh = _shingles_cached(df, id_col, text_col, k)
-    pairs = lsh_candidate_pairs(minhash_signatures(sh))
-    return jaccard_verify(sh, pairs).filter(F.col("jaccard") >= threshold)
+    docs = minhash_docs(df, id_col, text_col, k)
+    pairs = lsh_candidate_pairs(docs)
+    return jaccard_verify(docs, pairs).filter(
+        (F.col("jaccard") >= threshold) & (F.col("jaccard") > 0)
+    )
 
 
 def ngram_jaccard_pairs(

@@ -242,7 +242,9 @@ def ancestor_closure(
     docstring always declared (at most one parent row per node, no
     cycles — "ancestor" semantics); it is now enforced loudly with
     one |E|-row aggregate on the distance-1 relation instead of
-    silently emitting duplicate pairs on a multi-parent DAG.
+    silently emitting duplicate pairs on a multi-parent DAG. A cycle
+    passes that check, so running out of ``max_rounds`` with pairs
+    still at the frontier raises ValueError as well.
     Convergence is schedule-independent, so the result remains
     oracle-checkable against a recursive CTE.
     """
@@ -287,6 +289,16 @@ def ancestor_closure(
         # pairs beyond it cannot exist; counts only the increment
         if jump.count() == 0:
             break
+    else:
+        # out of rounds with pairs still at the frontier: a cycle
+        # (whose jumps never run dry; it would return duplicated rows)
+        # or a chain too deep to confirm complete in max_rounds
+        if not jump.isEmpty():
+            raise ValueError(
+                f"ancestor_closure did not converge in {max_rounds} rounds:"
+                " the input has a cycle or a chain of depth"
+                f" >= 2**{max_rounds}"
+            )
     return cl.select("node", "anc")
 
 

@@ -509,20 +509,11 @@ def dedup_minhash_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle). Same verify threshold as dedup_minhash_lsh; the result
     is its same-language subset, computed without ever materializing
     the cross-language candidates a post-filter would."""
-    from gpu_olap_engine_spark.operators.dedup import (
-        _shingles_cached,
-        jaccard_verify,
-        lsh_candidate_pairs,
-        minhash_signatures,
+    docs = D.minhash_docs(
+        T(spark, sf_dir, "documents"), "doc_id", "text", 3, extra_cols=("lang",)
     )
-
-    docs = T(spark, sf_dir, "documents")
-    sh = _shingles_cached(docs, "doc_id", "text", 3)
-    sig = minhash_signatures(sh).join(
-        docs.select(F.col("doc_id").alias("id"), "lang"), "id"
-    )
-    pairs = lsh_candidate_pairs(sig, block_col="lang")
-    return jaccard_verify(sh, pairs).filter(F.col("jaccard") >= 0.5)
+    pairs = D.lsh_candidate_pairs(docs, block_col="lang")
+    return D.jaccard_verify(docs, pairs).filter(F.col("jaccard") >= 0.5)
 
 
 @register(

@@ -317,7 +317,8 @@ def delete_where(
     """
     df = spark.read.parquet(path)
     total = df.count()
-    kept = df.filter(f"NOT ({predicate})")
+    # rows where the predicate is NULL are kept, as SQL DELETE keeps them
+    kept = df.filter(f"NOT coalesce(({predicate}), false)")
     staging = path.rstrip("/") + "__staging"
     kept.write.mode("overwrite").parquet(staging)
     _swap_in(path, staging)

@@ -41,10 +41,15 @@ removes.
 At 100 TB the same design holds: the manifest is metadata-only
 (file names + stats), commits are O(1) renames on the metadata
 store, and MERGE/DELETE rewrite only the files that actually contain
-matching keys (found with a semi-join on ``input_file_name``), not
-the table. A production deployment would shard the file list into
-Iceberg-style manifest files once it exceeds a few million entries;
-the commit protocol is unchanged by that.
+matching keys, not the table. One aggregation on ``input_file_name``
+counts the matching rows per file (``_matched_rows``); DELETE compares
+those counts with the manifest's per-file row counts, so a fully
+matched file is dropped without a write and the deleted count needs
+no further pass. Every internal read goes through the manifest's
+schema (``_read_files``), never Spark's schema inference, which would
+cost a footer-reading job per read. A production deployment would
+shard the file list into Iceberg-style manifest files once it exceeds
+a few million entries; the commit protocol is unchanged by that.
 
 Data skipping (Delta/Iceberg-style): every committed file carries
 per-column min/max/null-count stats in the manifest, harvested from
@@ -615,23 +620,68 @@ def _file_uri_to_rel(path: str, uri: str) -> str:
     return os.path.relpath(p, os.path.abspath(path))
 
 
-def _touched_files(
-    snap_files: list[str], path: str, spark: SparkSession, matcher
-) -> list[str]:
-    """Manifest-relative paths of the files containing rows selected by
-    `matcher` (df -> filtered df). Driver-side size is O(#files) —
+def _read_files(
+    spark: SparkSession, path: str, manifest: dict, files: list[str]
+) -> DataFrame:
+    """Read manifest-relative `files` through the manifest's schema.
+    Pinning the schema skips Spark's schema-inference job (a footer
+    read of every file) and reads pre-evolution files through the
+    widened schema, as read_snapshot does."""
+    return spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(
+        *[os.path.join(path, f) for f in files]
+    )
+
+
+def _matched_rows(
+    spark: SparkSession, path: str, manifest: dict, files: list[str], matcher
+) -> dict[str, int]:
+    """{manifest-relative file: rows selected by `matcher`} over the
+    files of `files` that hold at least one such row. `matcher` maps a
+    DataFrame to its selected rows (a filter or a semi-join). One
+    aggregation on input_file_name; driver-side size is O(#files) —
     metadata, not data."""
-    if not snap_files:
-        return []
-    df = spark.read.parquet(*[os.path.join(path, f) for f in snap_files])
-    tagged = matcher(df.withColumn("__file", F.input_file_name()))
-    uris = [r["__file"] for r in tagged.select("__file").distinct().collect()]
-    rel = {_file_uri_to_rel(path, u) for u in uris}
+    if not files:
+        return {}
+    tagged = matcher(
+        _read_files(spark, path, manifest, files)
+        .withColumn("__file", F.input_file_name())
+    )
+    counts = tagged.groupBy("__file").count().collect()
     # resolve through the manifest list so the returned names are the
     # manifest's own strings (realpath/symlink differences can make
     # relpath disagree byte-for-byte)
-    by_base = {os.path.basename(f): f for f in snap_files}
-    return sorted(by_base[os.path.basename(r)] for r in rel)
+    by_base = {os.path.basename(f): f for f in files}
+    return {
+        by_base[os.path.basename(_file_uri_to_rel(path, r["__file"]))]: r["count"]
+        for r in counts
+    }
+
+
+def _files_with_keys(
+    spark: SparkSession, path: str, manifest: dict, keys: DataFrame,
+    key: list[str],
+) -> list[str]:
+    """Sorted manifest-relative files holding a row whose `key` appears
+    in `keys`. With a single-column key, the manifest stats first drop
+    files whose key range cannot intersect the batch's [min, max], so
+    a selective merge scans O(matched files), planned from metadata
+    alone."""
+    candidates = manifest["files"]
+    stats = manifest.get("stats", {})
+    if len(key) == 1 and stats:
+        row = keys.agg(
+            F.min(key[0]).alias("lo"), F.max(key[0]).alias("hi")
+        ).collect()[0]
+        if row["lo"] is None:
+            return []
+        rng = [(key[0], ">=", row["lo"]), (key[0], "<=", row["hi"])]
+        candidates = [
+            f for f in candidates if _file_may_match(stats.get(f), rng)
+        ]
+    return sorted(_matched_rows(
+        spark, path, manifest, candidates,
+        lambda df: df.join(keys, key, "left_semi"),
+    ))
 
 
 def merge_into(
@@ -657,9 +707,11 @@ def merge_into(
 
     Semantics notes: rows in `updates` sharing a key ALL land (replace-
     with-provided-rows, not Delta's multiple-match error — pre-aggregate
-    if one-row-per-key matters). `updates`' lineage is consumed up to
-    three times (key derivation for the semi/anti joins + the write);
+    if one-row-per-key matters). `updates`' lineage is evaluated up to
+    four times (the key-range aggregate of the stats fast path, the
+    touched-file semi-join, and the anti-join and union of the write);
     callers with an expensive update pipeline should persist() it.
+    Keys are not deduplicated: semi and anti joins ignore duplicates.
     """
     v = latest_version(path)
     manifest = _load_manifest(path, v)
@@ -667,32 +719,13 @@ def merge_into(
     if app_id is not None and app_ids.get(app_id[0], -1) >= app_id[1]:
         return {"version": v, "skipped": True, "files_rewritten": 0}
 
-    keys = updates.select(*key).distinct()
-    # stats fast-path: a single-column key lets the manifest exclude
-    # files whose key range cannot intersect the update batch BEFORE
-    # the semi-join scan — a selective merge plans O(matched files)
-    # from metadata alone
-    candidates = manifest["files"]
-    stats = manifest.get("stats", {})
-    if len(key) == 1 and stats:
-        row = updates.agg(
-            F.min(key[0]).alias("lo"), F.max(key[0]).alias("hi")
-        ).collect()[0]
-        if row["lo"] is None:
-            candidates = []
-        else:
-            rng = [(key[0], ">=", row["lo"]), (key[0], "<=", row["hi"])]
-            candidates = [
-                f for f in candidates if _file_may_match(stats.get(f), rng)
-            ]
-    touched = _touched_files(
-        candidates, path, spark, lambda df: df.join(keys, key, "left_semi")
-    )
+    keys = updates.select(*key)
+    touched = _files_with_keys(spark, path, manifest, keys, key)
     untouched = [f for f in manifest["files"] if f not in set(touched)]
     if touched:
-        kept = spark.read.parquet(
-            *[os.path.join(path, f) for f in touched]
-        ).join(keys, key, "left_anti")
+        kept = _read_files(spark, path, manifest, touched).join(
+            keys, key, "left_anti"
+        )
         to_write = kept.unionByName(updates)
     else:
         to_write = updates
@@ -724,42 +757,46 @@ def merge_into(
 
 
 def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
-    """Delete rows matching a SQL predicate, snapshot-isolated. Only
-    files containing a matching row are rewritten (their keep-side);
-    all other files carry over untouched. Returns rows deleted."""
+    """Delete rows matching a SQL predicate, snapshot-isolated. Returns
+    rows deleted.
+
+    A row is deleted only where the predicate is TRUE; a row where it
+    is NULL (e.g. `q < 0.5` on a NULL q) is kept, as SQL DELETE keeps
+    it. One aggregation counts the matching rows per file; a file
+    whose every row matches (per its manifest row count) is dropped
+    from the manifest without a write, a partly matching file is
+    rewritten as its keep side, and all other files carry over
+    untouched."""
     v = latest_version(path)
     manifest = _load_manifest(path, v)
-    touched = _touched_files(
-        manifest["files"], path, spark, lambda df: df.filter(predicate)
+    matched = _matched_rows(
+        spark, path, manifest, manifest["files"],
+        lambda df: df.filter(predicate),
     )
-    deleted = 0
+    stats = manifest.get("stats", {})
+    partial = sorted(
+        f for f, n in matched.items() if stats.get(f, {}).get("rows") != n
+    )
     files: list[str] = []
-    if touched:
-        hit = spark.read.parquet(*[os.path.join(path, f) for f in touched])
-        kept = hit.filter(f"NOT ({predicate})")
-        n_kept = kept.count()
-        deleted = hit.count() - n_kept
-        if n_kept:
-            files = _write_txn_files(kept, path)
-        # else: every row in the touched files matched — drop them
-        # from the manifest without writing empty replacements
+    if partial:
+        kept = _read_files(spark, path, manifest, partial).filter(
+            f"NOT coalesce(({predicate}), false)"
+        )
+        files = _write_txn_files(kept, path)
     new = {
         "version": v + 1,
         "op": "delete",
-        "files": [f for f in manifest["files"] if f not in set(touched)] + files,
+        "files": [f for f in manifest["files"] if f not in matched] + files,
         "schema": manifest["schema"],
         "app_ids": manifest.get("app_ids", {}),
         "bloom_columns": manifest.get("bloom_columns", []),
         "stats": {
-            **{
-                f: s for f, s in manifest.get("stats", {}).items()
-                if f not in set(touched)
-            },
+            **{f: s for f, s in stats.items() if f not in matched},
             **_stats_for(path, files, manifest.get("bloom_columns", [])),
         },
     }
     _publish(path, v + 1, new)
-    return deleted
+    return sum(matched.values())
 
 
 def compact_table(spark: SparkSession, path: str, target_files: int) -> int:
@@ -905,30 +942,13 @@ def apply_changes(
     all_keys = parts[0]
     for p in parts[1:]:
         all_keys = all_keys.unionByName(p)
-    all_keys = all_keys.distinct()
-
-    candidates = manifest["files"]
-    stats = manifest.get("stats", {})
-    if len(key) == 1 and stats:
-        row = all_keys.agg(
-            F.min(key[0]).alias("lo"), F.max(key[0]).alias("hi")
-        ).collect()[0]
-        if row["lo"] is None:
-            candidates = []
-        else:
-            rng = [(key[0], ">=", row["lo"]), (key[0], "<=", row["hi"])]
-            candidates = [
-                f for f in candidates if _file_may_match(stats.get(f), rng)
-            ]
-    touched = _touched_files(
-        candidates, path, spark, lambda df: df.join(all_keys, key, "left_semi")
-    )
+    touched = _files_with_keys(spark, path, manifest, all_keys, key)
     untouched = [f for f in manifest["files"] if f not in set(touched)]
     to_write = None
     if touched:
-        to_write = spark.read.parquet(
-            *[os.path.join(path, f) for f in touched]
-        ).join(all_keys, key, "left_anti")
+        to_write = _read_files(spark, path, manifest, touched).join(
+            all_keys, key, "left_anti"
+        )
     if upserts is not None:
         to_write = (
             upserts if to_write is None else to_write.unionByName(upserts)

@@ -66,11 +66,6 @@ def main() -> None:
         for df in list(D._SHINGLE_CACHE.values()):
             df.unpersist()
         D._SHINGLE_CACHE.clear()
-        rc = getattr(D, "_RELATION_CACHE", None)
-        if rc is not None:
-            for df in list(rc.values()):
-                df.unpersist()
-            rc.clear()
         spark.catalog.clearCache()
 
     runs: dict[str, list[float]] = {n: [] for n in args.names}

@@ -211,3 +211,32 @@ def test_watchdog_zero_row_deferral_predicate():
     assert rows_all_landed(["smj", "shj"], {"smj", "shj"})
     # extra landed names (stale state) must not block the cancel
     assert rows_all_landed(["smj"], {"smj", "shj"})
+
+
+def test_cache_clear_failure_is_noted_and_other_steps_run():
+    """A failing cache-clear step lands in the artifact's notes and does
+    not stop the other steps."""
+    from gpu_olap_engine_spark.operators import dedup as D
+
+    class Df:
+        unpersisted = False
+
+        def unpersist(self):
+            self.unpersisted = True
+
+    class Catalog:
+        def clearCache(self):
+            raise RuntimeError("gateway gone")
+
+    class Spark:
+        catalog = Catalog()
+
+    df = Df()
+    D._SHINGLE_CACHE["probe"] = df
+    notes: list[str] = []
+    try:
+        bench._clear_engine_caches(Spark(), notes)
+    finally:
+        D._SHINGLE_CACHE.pop("probe", None)
+    assert df.unpersisted and "probe" not in D._SHINGLE_CACHE
+    assert notes == ["cache clear catalog.clearCache: RuntimeError"]

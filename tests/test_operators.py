@@ -36,6 +36,58 @@ def test_minhash_lsh_recall_vs_exact(spark):
     assert lsh == exact
 
 
+def _edge_docs(spark):
+    """NULL, empty, shorter-than-k and repeated-shingle texts."""
+    return spark.createDataFrame(
+        [
+            (1, "A b c d"),
+            (2, "x y"),
+            (3, ""),
+            (4, None),
+            (5, "a a a a a"),
+            (6, "  Leading   and trailing  "),
+        ],
+        "doc_id long, text string",
+    )
+
+
+def test_shingles_output_unchanged(spark):
+    got = {
+        (r["id"], r["shingle"])
+        for r in D.shingles(_edge_docs(spark), "doc_id", "text", 3).collect()
+    }
+    assert got == {
+        (1, "a b c"), (1, "b c d"), (2, "x y"), (3, ""), (4, ""),
+        (5, "a a a"), (6, "leading and trailing"),
+    }
+
+
+@pytest.mark.parametrize("src", [SF_SMALL, SF_ORACLE, "edge"])
+def test_minhash_docs_match_exploded_signatures(spark, src):
+    """The per-document arrays give every document the signature
+    minhash_signatures(shingles(...)) gives it, and the same shingle
+    set."""
+    if src == "edge":
+        docs = _edge_docs(spark)
+    else:
+        docs = spark.read.parquet(f"{src}/documents.parquet")
+    mh = [f"mh_{i}" for i in range(D.NUM_HASHES)]
+    sh = D.shingles(docs, "doc_id", "text", 3)
+    want_sig = {
+        r["id"]: tuple(r[c] for c in mh)
+        for r in D.minhash_signatures(sh).collect()
+    }
+    want_sh: dict = {}
+    for r in sh.collect():
+        want_sh.setdefault(r["id"], set()).add(r["shingle"])
+    rows = D.minhash_docs(docs, "doc_id", "text", 3).collect()
+    assert len(rows) == len(want_sig) == docs.count()
+    for r in rows:
+        assert tuple(r[c] for c in mh) == want_sig[r["id"]], r["id"]
+        assert len(r["sh"]) == len(want_sh[r["id"]])
+        assert set(r["sh"]) == want_sh[r["id"]]
+
+
 def test_simhash_near_for_planted_dups(spark):
     """Planted near-dup pairs must have small simhash hamming
     distance; random pairs average ~16 bits on 32."""
@@ -493,6 +545,29 @@ def test_delete_where_rewrites_dataset(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == before - expect_deleted
     assert back.filter("o_orderstatus = 'F'").count() == 0
+
+
+def test_ancestor_closure_rejects_cycle(spark):
+    """A 2-cycle has one parent per node, so it passes the forest
+    check; its jumps never run dry, and running out of rounds must
+    raise instead of returning duplicated pairs."""
+    from gpu_olap_engine_spark.operators.graph import ancestor_closure
+
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "node long, parent long")
+    with pytest.raises(ValueError, match="did not converge"):
+        ancestor_closure(edges, max_rounds=4).collect()
+
+
+def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):
+    from gpu_olap_engine_spark.sources import delete_where
+
+    path = str(tmp_path / "scores")
+    spark.createDataFrame(
+        [(1, 0.1), (2, None), (3, 0.9)], "k long, q double"
+    ).write.parquet(path)
+    assert delete_where(spark, path, "q < 0.5") == 1
+    got = {(r["k"], r["q"]) for r in spark.read.parquet(path).collect()}
+    assert got == {(2, None), (3, 0.9)}
 
 
 def test_pagerank_int_known_graph(spark):

@@ -10,7 +10,9 @@ file-granular MERGE/DELETE rewrites, time travel, and vacuum.
 from __future__ import annotations
 
 import os
+import uuid
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -221,6 +223,85 @@ def test_empty_table_after_full_delete_keeps_schema(spark, tmp_path):
     assert df.count() == 0
 
 
+def _txn_dirs(path):
+    return set(os.listdir(os.path.join(path, "data")))
+
+
+def test_delete_where_keeps_rows_where_predicate_is_null(spark, tmp_path):
+    """SQL DELETE removes only rows whose predicate is TRUE: a NULL
+    score sharing a file with a matching row survives the rewrite and
+    is not counted as deleted."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, 0.1), (2, None), (3, 0.9)], "k long, q double"
+    ).coalesce(1)
+    tf.create_table(df, path)
+    assert len(tf._load_manifest(path, 0)["files"]) == 1
+    assert tf.delete_where(spark, path, "q < 0.5") == 1
+    got = {(r["k"], r["q"]) for r in tf.read_snapshot(spark, path).collect()}
+    assert got == {(2, None), (3, 0.9)}
+
+
+def test_delete_where_drops_fully_matched_file_without_write(spark, tmp_path):
+    """A file whose every row matches leaves the manifest with no
+    replacement file written; the count comes from the per-file match
+    counts and the manifest's row counts."""
+    path = _mk(spark, tmp_path, n=100, parts=4)  # files hold k 0-24, 25-49, ...
+    before = _txn_dirs(path)
+    assert tf.delete_where(spark, path, "k < 25") == 25
+    assert _txn_dirs(path) == before
+    m0, m1 = tf._load_manifest(path, 0), tf._load_manifest(path, 1)
+    assert len(m1["files"]) == 3 and set(m1["files"]) < set(m0["files"])
+    # a full file plus part of another: only the partial one is rewritten
+    assert tf.delete_where(spark, path, "k < 60") == 35
+    m2 = tf._load_manifest(path, 2)
+    assert len(_txn_dirs(path) - before) == 1
+    assert len(set(m1["files"]) & set(m2["files"])) == 1
+    assert _rows(spark, path) == {(i, i * 10) for i in range(60, 100)}
+
+
+def test_merge_with_duplicate_update_keys_lands_every_row(spark, tmp_path):
+    path = _mk(spark, tmp_path)
+    updates = spark.createDataFrame(
+        [(5, -1), (5, -2), (200, -3), (200, -4)], "k long, v long"
+    )
+    tf.merge_into(spark, path, updates, ["k"])
+    got = sorted(
+        (r["k"], r["v"]) for r in tf.read_snapshot(spark, path).collect()
+    )
+    expect = sorted(
+        [(i, i * 10) for i in range(100) if i != 5]
+        + [(5, -1), (5, -2), (200, -3), (200, -4)]
+    )
+    assert got == expect
+
+
+def _jobs(spark, fn):
+    """Spark jobs launched by fn(), counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_delete_and_merge_job_counts(spark, tmp_path):
+    """DELETE runs one per-file match count and one rewrite; MERGE adds
+    the key-range aggregate and the anti-join. A schema-inference read
+    or an extra count() would show up here as additional jobs."""
+    path = _mk(spark, tmp_path, n=1000, parts=8)
+    assert _jobs(spark, lambda: tf.delete_where(
+        spark, path, "k >= 100 AND k < 110")) <= 3
+    # a pandas batch, as ingest code builds one (a Python-list batch is
+    # an RDD scan without size stats, whose joins plan as shuffles)
+    updates = spark.createDataFrame(pd.DataFrame({"k": [300, 301], "v": [-1, -2]}))
+    assert _jobs(spark, lambda: tf.merge_into(spark, path, updates, ["k"])) <= 7
+
+
 # ---------------------------------------------------------------- stats
 
 
@@ -284,18 +365,18 @@ def test_merge_stats_fastpath_prunes_candidates(spark, tmp_path):
     stats-pruned candidate list, not the table."""
     path = _mk(spark, tmp_path, n=1000, parts=8)
     seen = {}
-    real = tf._touched_files
+    real = tf._matched_rows
 
-    def spy(snap_files, p, s, matcher):
-        seen["candidates"] = list(snap_files)
-        return real(snap_files, p, s, matcher)
+    def spy(s, p, manifest, files, matcher):
+        seen["candidates"] = list(files)
+        return real(s, p, manifest, files, matcher)
 
-    tf._touched_files = spy
+    tf._matched_rows = spy
     try:
         u = spark.createDataFrame([(5, -5), (17, -17)], "k long, v long")
         r = tf.merge_into(spark, path, u, ["k"])
     finally:
-        tf._touched_files = real
+        tf._matched_rows = real
     assert len(seen["candidates"]) == 1  # ids 0..124 live in one file
     assert r["files_rewritten"] == 1 and r["files_untouched"] == 7
     rows = _rows(spark, path)
