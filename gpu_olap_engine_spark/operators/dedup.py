@@ -20,12 +20,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Shingle cache keyed by (input plan, id/text cols, k): the exploded
-# (id, shingle) consumers over one corpus — ngram_jaccard_pairs,
+# Shingle cache keyed by (input plan, relation kind, args): the
+# shingle-derived relations over one corpus — the exploded
+# (id, shingle) relation of ngram_jaccard_pairs,
 # ngram_containment_pairs, q76's 3-gram ratio and q73's 8-gram
-# decontamination in one session — share ONE persisted shingle
-# relation instead of churning persist/unpersist. MinHash-LSH is not
-# a consumer: it works on per-document arrays. Bounded; evicting
+# decontamination, and MinHash-LSH's per-document arrays
+# (minhash_docs: band join plus both verify joins) — are persisted
+# once per corpus instead of re-derived per consumer or churned
+# through persist/unpersist. Bounded; evicting
 # an entry only unpersists it — lineage stays valid, so any
 # still-unevaluated result that referenced it just recomputes
 # (slower, never wrong). Guarded by a lock: the driver may execute
@@ -38,25 +40,44 @@ import threading as _threading  # noqa: E402
 _SHINGLE_LOCK = _threading.Lock()
 
 
-def _shingles_cached(
-    df: DataFrame, id_col: str, text_col: str, k: int
-) -> DataFrame:
-    """shingles(), persisted and memoized per (input, args). Keyed by
+def _persisted(df: DataFrame, args: tuple, build) -> DataFrame:
+    """build(), persisted and memoized per (input, args). Keyed by
     the analyzed plan's semantic hash so fresh DataFrame objects over
     the same scan hit the same entry."""
     try:
         plan_key = df._jdf.queryExecution().analyzed().semanticHash()
     except Exception:  # internal API moved — degrade to per-object
         plan_key = id(df)
-    key = (plan_key, id_col, text_col, k)
+    key = (plan_key, *args)
     with _SHINGLE_LOCK:
-        sh = _SHINGLE_CACHE.get(key)
-        if sh is None:
-            sh = shingles(df, id_col, text_col, k).persist()
+        out = _SHINGLE_CACHE.get(key)
+        if out is None:
+            out = build().persist()
             if len(_SHINGLE_CACHE) >= _SHINGLE_CACHE_MAX:
                 _SHINGLE_CACHE.pop(next(iter(_SHINGLE_CACHE))).unpersist()
-            _SHINGLE_CACHE[key] = sh
-        return sh
+            _SHINGLE_CACHE[key] = out
+        return out
+
+
+def _shingles_cached(
+    df: DataFrame, id_col: str, text_col: str, k: int
+) -> DataFrame:
+    """shingles(), persisted and memoized per (input, args)."""
+    return _persisted(
+        df, ("shingles", id_col, text_col, k),
+        lambda: shingles(df, id_col, text_col, k),
+    )
+
+
+def _minhash_docs_cached(
+    df: DataFrame, id_col: str, text_col: str, k: int,
+    extra_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """minhash_docs(), persisted and memoized per (input, args)."""
+    return _persisted(
+        df, ("minhash_docs", id_col, text_col, k, extra_cols),
+        lambda: minhash_docs(df, id_col, text_col, k, extra_cols),
+    )
 
 
 # r13 note: a generalized persist-memo for intra-operator shared
@@ -69,7 +90,10 @@ def _shingles_cached(
 # scan+explode it saves on these narrow inputs. The shingle cache
 # above survives because its consumers span SEPARATE actions (several
 # registry entries share one corpus' shingles), where recompute is
-# paid per action and the barrier amortizes.
+# paid per action and the barrier amortizes. minhash_docs is the
+# in-query exception: its derive (tokenize, shingle, md5 per shingle)
+# is the expensive part, not the scan, and without the persist it ran
+# once per consumer (band join, verify a, verify b).
 
 # Affine permutation constants for MinHash: h_i(x) = (A[i]*x + B[i]) % P.
 # P is prime; A,B < 2^31 so A*x never overflows int64 (x < P < 2^31).
@@ -274,19 +298,17 @@ def minhash_dedup_pairs(
     document -> band -> candidate join -> exact-Jaccard verify ->
     threshold.
 
-    The per-document relation (minhash_docs) is one narrow projection
-    over the spread input, consumed by the band self-join and by both
-    verify joins. Nothing is persisted: the spread exchange it starts
-    from is reused by every consumer, and there is no exploded
-    shingle relation to shuffle. A candidate pair with zero overlap
-    never passes (the inner-join verify this replaced dropped it), even
-    at threshold 0.
+    The per-document relation (minhash_docs) feeds three consumers
+    (the band self-join and both verify joins); it is persisted and
+    memoized per input (_minhash_docs_cached) so the tokenize, shingle
+    and hash derive runs once per document, not once per consumer.
+    There is no exploded shingle relation to shuffle. At 100 TB the
+    equivalent is writing the per-document relation to storage once
+    per corpus snapshot.
     """
-    docs = minhash_docs(df, id_col, text_col, k)
+    docs = _minhash_docs_cached(df, id_col, text_col, k)
     pairs = lsh_candidate_pairs(docs)
-    return jaccard_verify(docs, pairs).filter(
-        (F.col("jaccard") >= threshold) & (F.col("jaccard") > 0)
-    )
+    return jaccard_verify(docs, pairs).filter(F.col("jaccard") >= threshold)
 
 
 def ngram_jaccard_pairs(

@@ -509,7 +509,7 @@ def dedup_minhash_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle). Same verify threshold as dedup_minhash_lsh; the result
     is its same-language subset, computed without ever materializing
     the cross-language candidates a post-filter would."""
-    docs = D.minhash_docs(
+    docs = D._minhash_docs_cached(
         T(spark, sf_dir, "documents"), "doc_id", "text", 3, extra_cols=("lang",)
     )
     pairs = D.lsh_candidate_pairs(docs, block_col="lang")

@@ -571,11 +571,6 @@ def test_tpch_q12_derivation_stays_jvm_side(spark):
 # shapes (q141's 6 = the edge frame's inherent 3 references x the
 # 2-scan op self-join; sim_decontaminate's 4 = corpus/benchmark x
 # index-build/verify — asymmetric by design, see DESIGN_100TB §5).
-# Scans are counted in the plan that RAN (AQE's final plan, after the
-# entry executes): a subtree shared through a reused exchange is read
-# once and appears once there, while the pre-execution plan prints it
-# once per consumer. Union branches stay distinct subtrees under
-# per-branch pruning, so they are still counted per branch.
 SCAN_BUDGETS = {
     "q141_triangle_count": {"lineitem": 6},
     "q70_joint_dedup_flags": {"documents": 2, "embeddings": 2},
@@ -596,9 +591,7 @@ SCAN_BUDGETS = {
 
 @pytest.mark.parametrize("name", sorted(SCAN_BUDGETS))
 def test_scan_count_budget(spark, name):
-    df = REGISTRY[name].fn(spark, SF_ORACLE)
-    df.collect()
-    plan = plan_of(df, "simple").split("== Initial Plan ==")[0]
+    plan = plan_of(REGISTRY[name].fn(spark, SF_ORACLE))
     for table, budget in SCAN_BUDGETS[name].items():
         got = plan.count(f"{table}.parquet")
         assert got <= budget, (
