@@ -373,39 +373,22 @@ def should_run_rep(
 
 
 def _clear_engine_caches(spark, notes: list[str]) -> None:
-    """Drop every cross-QUERY relation cache before a timed headline
-    row (r14, VERDICT r13 #5/#9): operators/dedup.py memoizes the
-    persisted shingle relation per (plan, args) so that e.g. q76's
-    timed row used to inherit the relation q73's row had already
-    built and persisted — cross-entry state that sits too close to
-    the "cached intermediate inside the timed region" line. Clearing
-    between rows makes every row pay its own builds, exactly like a
-    standalone run of that query; persists INSIDE one query's
-    execution (pagerank's ew, q141's oriented edges) are untouched —
-    they materialize and die within the row that pays for them.
-    Methodology change recorded in OPTIMIZATION_r14.md with the old
-    numbers kept (q73/q76/dedup_minhash_lsh are the affected rows).
+    """Drop every cached relation before a timed headline row (r14,
+    VERDICT r13 #5/#9), so each row pays its own builds, exactly like
+    a standalone run of that query. Persists made inside a query
+    (persist.py: q141's edges, the dedup/similarity operators' shared
+    relations) are already released when the previous row's result is
+    collected; clearing the catalog's cache also drops anything an
+    earlier row left behind. Methodology change recorded in
+    OPTIMIZATION_r14.md with the old numbers kept (q73/q76/
+    dedup_minhash_lsh are the affected rows).
 
-    Each step runs on its own: a failing step is written to `notes`
-    and the remaining steps still run (cache hygiene must never kill
-    the bench, nor hide that it did not happen)."""
-    from gpu_olap_engine_spark.operators import dedup as D  # noqa: PLC0415
-    from gpu_olap_engine_spark.operators import similarity as S  # noqa: PLC0415
-
-    def drop(cache: dict) -> None:
-        for df in list(cache.values()):
-            df.unpersist()
-        cache.clear()
-
-    for step, fn in (
-        ("dedup._SHINGLE_CACHE", lambda: drop(D._SHINGLE_CACHE)),
-        ("similarity._KEYED_CACHE", lambda: drop(S._KEYED_CACHE)),
-        ("catalog.clearCache", spark.catalog.clearCache),
-    ):
-        try:
-            fn()
-        except Exception as e:  # noqa: BLE001
-            notes.append(f"cache clear {step}: {type(e).__name__}")
+    A failure is written to `notes` (cache hygiene must never kill the
+    bench, nor hide that it did not happen)."""
+    try:
+        spark.catalog.clearCache()
+    except Exception as e:  # noqa: BLE001
+        notes.append(f"cache clear catalog.clearCache: {type(e).__name__}")
 
 
 def _stderr_tail(path: str, lines: int = 30, chars: int = 3000) -> str:

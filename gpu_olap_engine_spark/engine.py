@@ -105,6 +105,7 @@ class OlapEngine:
         RAM cache (catalog.rs:49-59); at 100 TB fact tables exceed the
         threshold and stream from storage, exactly as intended.
         """
+        self.clear_query_cache()
         df = self.spark.read.parquet(path)
         row_count = df.count()  # metadata-only for plain parquet scans
         cached = False
@@ -118,6 +119,7 @@ class OlapEngine:
 
     def register(self, name: str, df: DataFrame) -> None:
         """Register an arbitrary DataFrame as a queryable table."""
+        self.clear_query_cache()
         df.createOrReplaceTempView(name)
         self._catalog[name] = TableMetadata(name, "<dataframe>", df.schema, -1, False)
 
@@ -132,6 +134,7 @@ class OlapEngine:
 
     def drop_table(self, name: str) -> None:
         """catalog.rs:111-116 analog."""
+        self.clear_query_cache()
         self._catalog.pop(name)
         self.spark.catalog.dropTempView(name)
 
@@ -208,7 +211,9 @@ class OlapEngine:
         working implementation of the reference's ``enable_cache``
         flag, which exists but is never consulted there
         (lib.rs:29-30,41). The DataFrame is persisted on first use;
-        repeated identical queries reuse the materialized result."""
+        repeated identical queries reuse the materialized result until
+        a catalog change (load_table, register, drop_table) clears the
+        cache, since the same SQL text may then name other data."""
         if not self.config.enable_cache:
             return self.execute_query(sql)
         if sql not in self._query_cache:

@@ -20,80 +20,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Shingle cache keyed by (input plan, relation kind, args): the
-# shingle-derived relations over one corpus — the exploded
-# (id, shingle) relation of ngram_jaccard_pairs,
-# ngram_containment_pairs, q76's 3-gram ratio and q73's 8-gram
-# decontamination, and MinHash-LSH's per-document arrays
-# (minhash_docs: band join plus both verify joins) — are persisted
-# once per corpus instead of re-derived per consumer or churned
-# through persist/unpersist. Bounded; evicting
-# an entry only unpersists it — lineage stays valid, so any
-# still-unevaluated result that referenced it just recomputes
-# (slower, never wrong). Guarded by a lock: the driver may execute
-# query callables concurrently.
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-_SHINGLE_CACHE_MAX = 4
+from gpu_olap_engine_spark.persist import persist, query_scoped
 
-import threading as _threading  # noqa: E402
-
-_SHINGLE_LOCK = _threading.Lock()
-
-
-def _persisted(df: DataFrame, args: tuple, build) -> DataFrame:
-    """build(), persisted and memoized per (input, args). Keyed by
-    the analyzed plan's semantic hash so fresh DataFrame objects over
-    the same scan hit the same entry."""
-    try:
-        plan_key = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # internal API moved — degrade to per-object
-        plan_key = id(df)
-    key = (plan_key, *args)
-    with _SHINGLE_LOCK:
-        out = _SHINGLE_CACHE.get(key)
-        if out is None:
-            out = build().persist()
-            if len(_SHINGLE_CACHE) >= _SHINGLE_CACHE_MAX:
-                _SHINGLE_CACHE.pop(next(iter(_SHINGLE_CACHE))).unpersist()
-            _SHINGLE_CACHE[key] = out
-        return out
-
-
-def _shingles_cached(
-    df: DataFrame, id_col: str, text_col: str, k: int
-) -> DataFrame:
-    """shingles(), persisted and memoized per (input, args)."""
-    return _persisted(
-        df, ("shingles", id_col, text_col, k),
-        lambda: shingles(df, id_col, text_col, k),
-    )
-
-
-def _minhash_docs_cached(
-    df: DataFrame, id_col: str, text_col: str, k: int,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """minhash_docs(), persisted and memoized per (input, args)."""
-    return _persisted(
-        df, ("minhash_docs", id_col, text_col, k, extra_cols),
-        lambda: minhash_docs(df, id_col, text_col, k, extra_cols),
-    )
-
-
-# r13 note: a generalized persist-memo for intra-operator shared
-# subtrees (span-stats `per`, lines `occ`, simhash `wc`, q143's
-# events projection) was built and measured this round — every one of
-# those persists LOST in in-process alternating A/Bs at sf0.1
-# (span 4.41 vs 1.39 s, lines 2.26 vs 1.13 s, simhash 10.0 vs 3.55 s,
-# q143 1.44 vs 1.39 s): the cache materialization barrier (eager full
-# evaluation + columnar write) costs more than the second
-# scan+explode it saves on these narrow inputs. The shingle cache
-# above survives because its consumers span SEPARATE actions (several
-# registry entries share one corpus' shingles), where recompute is
-# paid per action and the barrier amortizes. minhash_docs is the
-# in-query exception: its derive (tokenize, shingle, md5 per shingle)
-# is the expensive part, not the scan, and without the persist it ran
-# once per consumer (band join, verify a, verify b).
+# Persist policy. MinHash-LSH's per-document arrays (minhash_docs)
+# feed three consumers in one query (the band join and both verify
+# joins), and their derive (tokenize, shingle, md5 per shingle) is the
+# expensive part; the n-gram operators' exploded (id, shingle)
+# relation feeds three as well (the size aggregate and both sides of
+# the self-join). Both are persisted for the life of the query's
+# result (persist.py), so each derive runs once and the plan scans the
+# documents once (SCAN_BUDGETS in tests/test_plans.py). r13 measured
+# where persist does not pay: cheap scan+explode subtrees with two
+# consumers (span-stats `per`, lines `occ`, simhash `wc`, q143's
+# events projection) LOST every in-process A/B at sf0.1 (span 4.41 vs
+# 1.39 s, lines 2.26 vs 1.13 s, simhash 10.0 vs 3.55 s, q143 1.44 vs
+# 1.39 s): the materialization barrier (eager full evaluation +
+# columnar write) cost more than the second scan+explode it saved.
 
 # Affine permutation constants for MinHash: h_i(x) = (A[i]*x + B[i]) % P.
 # P is prime; A,B < 2^31 so A*x never overflows int64 (x < P < 2^31).
@@ -291,6 +233,7 @@ def jaccard_verify(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
+@query_scoped
 def minhash_dedup_pairs(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, threshold: float = 0.5
 ) -> DataFrame:
@@ -299,25 +242,26 @@ def minhash_dedup_pairs(
     threshold.
 
     The per-document relation (minhash_docs) feeds three consumers
-    (the band self-join and both verify joins); it is persisted and
-    memoized per input (_minhash_docs_cached) so the tokenize, shingle
-    and hash derive runs once per document, not once per consumer.
-    There is no exploded shingle relation to shuffle. At 100 TB the
-    equivalent is writing the per-document relation to storage once
-    per corpus snapshot.
+    (the band self-join and both verify joins); it is persisted for
+    the life of the returned result, so the tokenize, shingle and hash
+    derive runs once per document, not once per consumer. There is no
+    exploded shingle relation to shuffle. At 100 TB the equivalent is
+    writing the per-document relation to storage once per corpus
+    snapshot.
     """
-    docs = _minhash_docs_cached(df, id_col, text_col, k)
+    docs = persist(minhash_docs(df, id_col, text_col, k))
     pairs = lsh_candidate_pairs(docs)
     return jaccard_verify(docs, pairs).filter(F.col("jaccard") >= threshold)
 
 
+@query_scoped
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, threshold: float = 0.2
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard via the shingle inverted index
     (no LSH): sub-quadratic because only pairs sharing >= 1 shingle
     materialize. The exact baseline the LSH path is validated against."""
-    sh = _shingles_cached(df, id_col, text_col, k)
+    sh = persist(shingles(df, id_col, text_col, k))
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     sa, sb = sh.alias("sa"), sh.alias("sb")
     inter = (
@@ -340,6 +284,7 @@ def ngram_jaccard_pairs(
     )
 
 
+@query_scoped
 def ngram_containment_pairs(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, threshold: float = 0.6
 ) -> DataFrame:
@@ -349,7 +294,7 @@ def ngram_containment_pairs(
     Same inverted-index candidate plan as ngram_jaccard_pairs (only
     pairs sharing a shingle materialize, never corpus-quadratic); the
     scoring denominator is the smaller set."""
-    sh = _shingles_cached(df, id_col, text_col, k)
+    sh = persist(shingles(df, id_col, text_col, k))
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     sa, sb = sh.alias("sa"), sh.alias("sb")
     inter = (

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gpu_olap_engine_spark.persist import persist, query_scoped
+
 SCALE = 1e12  # term quantization: floor(x*y*SCALE) summed as int64
 
 
@@ -219,48 +221,6 @@ def bucketed_topk(
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
     )
-
-
-_KEYED_CACHE: dict = {}
-_KEYED_CACHE_MAX = 8
-
-import threading as _threading  # noqa: E402
-
-_KEYED_LOCK = _threading.Lock()
-
-
-def _keyed_persisted(df: DataFrame) -> DataFrame:
-    """Persist-and-memoize a keyed relation that the gram blocking
-    consumes more than once (bucket-size aggregate + join back).
-
-    The keyed relation is the operator's expensive stage — an Arrow
-    mapInPandas derive (near-dup, decontaminate) or a k-means
-    assignment scan (semdedup) — and without materialization each
-    consumer re-executes the whole pass (measured: the operator's L1
-    wall was 2x the derive, scripts/r14_prof_neardup.py). A COUNT
-    window over bkey was A/B'd as the one-pass alternative and
-    REJECTED for scale: it shuffles the full relation on bare bkey,
-    whose cardinality the near-dup key domain caps at 128 — a hard
-    parallelism ceiling at 100 TB (the q72-fusion lesson). The
-    persist keeps the derive single-evaluation while every shuffle
-    stays on the scalable (bkey, chunk) group keys.
-
-    Same pattern, bounds and bench hygiene as dedup._SHINGLE_CACHE:
-    memoized per semantic plan hash, capped with unpersist eviction,
-    cleared by bench.py between timed rows so no row inherits
-    another's build."""
-    try:
-        plan_key = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # internal API moved — degrade to per-object
-        plan_key = id(df)
-    with _KEYED_LOCK:
-        cached = _KEYED_CACHE.get(plan_key)
-        if cached is None:
-            cached = df.persist()
-            if len(_KEYED_CACHE) >= _KEYED_CACHE_MAX:
-                _KEYED_CACHE.pop(next(iter(_KEYED_CACHE))).unpersist()
-            _KEYED_CACHE[plan_key] = cached
-        return cached
 
 
 def _qident(name: str) -> str:
@@ -940,6 +900,7 @@ def _mask_gate(
     )
 
 
+@query_scoped
 def near_dup_pairs(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -1039,6 +1000,7 @@ def near_dup_pairs(
     return gram_pairs(keyed, threshold, max_bucket, chunk, block_rows)
 
 
+@query_scoped
 def gram_pairs(
     keyed: DataFrame,
     threshold: float,
@@ -1088,7 +1050,7 @@ def gram_pairs(
     otherwise the legacy distinct remains. Returns distinct
     (id_a, id_b, cosine), id_a < id_b, under every mode."""
     gated = "mlo" in keyed.columns
-    grouped = _blocked_groups(keyed, max_bucket, chunk)
+    grouped = _blocked_groups(persist(keyed), max_bucket, chunk)
 
     empty = pd.DataFrame(
         {"id_a": pd.Series([], dtype="int64"),
@@ -1173,6 +1135,7 @@ def gram_pairs(
     return result if gated or assume_unique else result.distinct()
 
 
+@query_scoped
 def gram_cross_pairs(
     keyed_big: DataFrame,
     keyed_small: DataFrame,
@@ -1199,17 +1162,14 @@ def gram_cross_pairs(
     (id_big, id_small, cosine) under every mode."""
     gated = "mlo" in keyed_big.columns and "mlo" in keyed_small.columns
     kcols = ["mlo", "mhi"] if gated else []
-    # r14 (guide §2.4/§4, same fix as _blocked_groups): both sides are
-    # persisted+memoized — the old shape evaluated keyed_big (the
-    # corpus derive, a Python mapInPandas pass) twice (size aggregate
-    # + join back) and, when big/small are filters of one shared
-    # keyed relation as in sim_decontaminate, the derive ran three
-    # times. With the persist each side materializes once; sizes
-    # aggregates map-side and broadcasts (|distinct bkey| <= 128).
-    # A union+window one-pass form was A/B-equal locally but REJECTED
+    # r14 (guide §2.4/§4, same fix as _blocked_groups): keyed_big (the
+    # corpus derive, a Python mapInPandas pass) has two consumers (size
+    # aggregate + join back), so it is persisted; keyed_small has one.
+    # Callers whose sides filter one keyed relation persist that
+    # relation (sim_decontaminate), so the derive runs once. A
+    # union+window one-pass form was A/B-equal locally but REJECTED
     # for the bare-bkey shuffle's <=128-way parallelism cap at scale.
-    keyed_big = _keyed_persisted(keyed_big)
-    keyed_small = _keyed_persisted(keyed_small)
+    keyed_big = persist(keyed_big)
     sizes = keyed_big.groupBy("bkey").agg(F.count("*").alias("bsz"))
     nch = (
         F.when(F.col("bsz") <= max_bucket, F.lit(1))
@@ -1456,21 +1416,19 @@ def _blocked_groups(
     input) rides along when present.
 
     r14 (guide §2.4/§4 — profiled in scripts/r14_prof_neardup.py):
-    `keyed` is persisted+memoized (_keyed_persisted). The old shape
-    consumed it twice — bucket-size aggregate + the join back — and
-    `keyed` is the operator's expensive relation (a Python
-    mapInPandas derive for near-dup/decontaminate, a k-means
-    assignment scan for semdedup), so the whole Python/assignment
-    pass executed twice per query. With the persist both consumers
-    read ONE materialization, and every shuffle stays on scalable
-    keys (sizes aggregates map-side; rows move only on the exploded
-    (bkey, gi, gj) group keys). A COUNT-window alternative was
-    A/B-equal locally but REJECTED: it shuffles the corpus on bare
-    bkey — a <=128-way parallelism ceiling at 100 TB."""
+    `keyed` is read twice — bucket-size aggregate + the join back —
+    and it is the operator's expensive relation (a Python mapInPandas
+    derive for near-dup/decontaminate, a k-means assignment scan for
+    semdedup), so the caller passes it persisted (gram_pairs does, for
+    the life of its result) and the Python/assignment pass runs once
+    per query. Every shuffle stays on scalable keys (sizes aggregates
+    map-side; rows move only on the exploded (bkey, gi, gj) group
+    keys). A COUNT-window alternative was A/B-equal locally but
+    REJECTED: it shuffles the corpus on bare bkey — a <=128-way
+    parallelism ceiling at 100 TB."""
     cols = ["bkey", "vid", "qvec"] + (
         ["mlo", "mhi"] if "mlo" in keyed.columns else []
     )
-    keyed = _keyed_persisted(keyed)
     sizes = keyed.groupBy("bkey").agg(F.count("*").alias("bsz"))
     nch = (
         F.when(F.col("bsz") <= max_bucket, F.lit(1))
@@ -1496,6 +1454,7 @@ def _blocked_groups(
     )
 
 
+@query_scoped
 def semdedup(
     corpus: DataFrame,
     id_col: str = "vec_id",

@@ -9,6 +9,8 @@ aggregates use exact decimal arithmetic (see ``queries.tables``).
 
 Entries whose semantics are not SQL-expressible (streaming state,
 ML-backed LSH) carry ``oracle=None`` -> rows-only check.
+
+Entries run in a query scope (``persist.query_scoped``).
 """
 
 from __future__ import annotations
@@ -17,6 +19,8 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from gpu_olap_engine_spark.persist import query_scoped
 
 
 @dataclass
@@ -31,9 +35,10 @@ REGISTRY: dict[str, Query] = {}
 
 
 def register(name: str, oracle: str | None = None, doc: str = ""):
-    """Decorator registering a query implementation + its oracle SQL."""
+    """Decorator registering a query-scoped implementation + its oracle SQL."""
 
     def deco(fn):
+        fn = query_scoped(fn)
         REGISTRY[name] = Query(name, fn, oracle, doc or (fn.__doc__ or "").strip())
         return fn
 

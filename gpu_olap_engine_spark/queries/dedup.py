@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_olap_engine_spark.operators import dedup as D
+from gpu_olap_engine_spark.persist import persist
 from gpu_olap_engine_spark.queries import register
 from gpu_olap_engine_spark.queries.tables import T
 
@@ -509,9 +510,9 @@ def dedup_minhash_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle). Same verify threshold as dedup_minhash_lsh; the result
     is its same-language subset, computed without ever materializing
     the cross-language candidates a post-filter would."""
-    docs = D._minhash_docs_cached(
+    docs = persist(D.minhash_docs(
         T(spark, sf_dir, "documents"), "doc_id", "text", 3, extra_cols=("lang",)
-    )
+    ))
     pairs = D.lsh_candidate_pairs(docs, block_col="lang")
     return D.jaccard_verify(docs, pairs).filter(F.col("jaccard") >= 0.5)
 

@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from gpu_olap_engine_spark.operators import dedup as D
 from gpu_olap_engine_spark.operators.dedup import base_hash, tokenize
+from gpu_olap_engine_spark.persist import persist
 from gpu_olap_engine_spark.queries import register
 from gpu_olap_engine_spark.queries.dedup import _banded_sql, _JACCARD_TAIL, _mat, _SH, _sig_sql
 from gpu_olap_engine_spark.queries.similarity import _block_sql
@@ -465,7 +466,7 @@ def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB of training data), candidates via equi-join on the shingle
     — never a text-to-text comparison."""
     docs = T(spark, sf_dir, "documents")
-    sh = D._shingles_cached(docs, "doc_id", "text", 8)  # columns (id, shingle)
+    sh = persist(D.shingles(docs, "doc_id", "text", 8))  # columns (id, shingle)
     bench = sh.filter(F.col("id") % 7 == 0).select("shingle").distinct()
     return (
         sh.filter(F.col("id") % 7 != 0)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gpu_olap_engine_spark.persist import persist
 from gpu_olap_engine_spark.queries import register
 from gpu_olap_engine_spark.queries.tables import T, _view, davg, dsum, o_davg, o_dsum
 
@@ -1197,17 +1198,17 @@ def q141(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans). This is the case persist is FOR (recompute far above
     materialization cost — unlike the cheap scan+explode subtrees
     where the same experiment lost, see operators/dedup.py): paired
-    in-process A/B min 7.4 vs 12.2 s at sf0.1, identical rows.
-    Repeated construction is deduped by Spark's CacheManager (same
-    canonicalized plan -> same cache entry), so the footprint is one
-    edge list per corpus, evictable under memory pressure with
-    lineage intact. localCheckpoint measured slightly worse (8.7 s)
-    and forfeits lineage."""
+    in-process A/B min 7.4 vs 12.2 s at sf0.1, identical rows. The
+    persist lives as long as the returned result (persist.py): the
+    footprint is one edge list per live result, evictable under
+    memory pressure with lineage intact, and released when the result
+    is collected. localCheckpoint measured slightly worse (8.7 s) and
+    forfeits lineage."""
     li = T(spark, sf_dir, "lineitem")
     op = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
     ).distinct()
-    e = (
+    e = persist(
         op.alias("a")
         .join(
             op.alias("b"),
@@ -1215,7 +1216,6 @@ def q141(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.pk").alias("a"), F.col("b.pk").alias("b"))
         .distinct()
-        .persist()
     )
     ab, bc, ac = e.alias("ab"), e.alias("bc"), e.alias("ac")
     # r14 (guide §3.2): the closing join's stream side is the WEDGE

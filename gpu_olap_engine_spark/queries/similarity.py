@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_olap_engine_spark.operators import similarity as S
+from gpu_olap_engine_spark.persist import persist
 from gpu_olap_engine_spark.queries import register
 from gpu_olap_engine_spark.queries.dedup import _mat
 from gpu_olap_engine_spark.queries.tables import T
@@ -246,10 +247,12 @@ def sim_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic train-train work the symmetric operator would pay is
     skipped entirely. Emits (vec_id, n_eval_hits, max_cosine) per
     contaminated training vector; max over bit-identical IEEE cosines
-    is cross-engine exact."""
-    keyed = S._near_dup_keyed(
+    is cross-engine exact. Both sides filter one keyed relation,
+    persisted here so its mapInPandas derive runs once, not once per
+    side."""
+    keyed = persist(S._near_dup_keyed(
         T(spark, sf_dir, "embeddings"), "vec_id", "embedding", 10
-    )
+    ))
     train = keyed.filter(F.col("vid") % 7 != 0)
     ev = keyed.filter(F.col("vid") % 7 == 0)
     return (

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_olap_engine_spark.operators import text as X
+from gpu_olap_engine_spark.persist import persist
 from gpu_olap_engine_spark.queries import register
 from gpu_olap_engine_spark.queries.tables import T, spread
 
@@ -206,7 +207,7 @@ def q76_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor (gibberish detector), punctuation ceiling (markup/code
     detector), and duplicate-3-gram ceiling (repetition detector) —
     the standard rule stack a curation pipeline applies before any
-    model-based scoring. One scan + the (cached) shingle pass; every
+    model-based scoring. One scan + the (persisted) shingle pass; every
     rule is a per-document expression, so the gate is reshard-stable
     and embarrassingly parallel at 100 TB."""
     from gpu_olap_engine_spark.operators import dedup as D
@@ -214,7 +215,7 @@ def q76_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents")
     feats = X.quality_features(spread(docs), "doc_id", "text")
     d3 = (
-        D._shingles_cached(docs, "doc_id", "text", 3)
+        persist(D.shingles(docs, "doc_id", "text", 3))
         .groupBy("id")
         .agg(F.count("*").alias("n_distinct"))
     )

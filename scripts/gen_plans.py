@@ -22,6 +22,11 @@ SHOW = [
     ("dedup_minhash_lsh", "LSH candidate equi-join (no cartesian)"),
     ("sim_near_dup_pairs", "inverted-index blocking + verify (no all-pairs join)"),
     (
+        "sim_decontaminate",
+        "train x eval cross verify: one keyed derive, persisted, both sides filter it "
+        "(formatted explain draws the eval side's cache read as a bare derive)",
+    ),
+    (
         "sim_random_hyperplane_lsh",
         "sign-projection LSH: (table, bucket) equi-join candidates, no cartesian",
     ),

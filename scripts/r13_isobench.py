@@ -57,15 +57,10 @@ def main() -> None:
     registry["q03_join_agg_topk"].fn(spark, "/root/testdata/sf0.001").collect()
 
     def clear_caches() -> None:
-        """Reset every cross-call relation cache so each rep computes
-        from parquet, matching the driver bench's once-per-run cold
+        """Drop every cached relation so each rep computes from
+        parquet, matching the driver bench's once-per-run cold
         execution (reps 2+ would otherwise read persisted
         intermediates and under-report)."""
-        from gpu_olap_engine_spark.operators import dedup as D
-
-        for df in list(D._SHINGLE_CACHE.values()):
-            df.unpersist()
-        D._SHINGLE_CACHE.clear()
         spark.catalog.clearCache()
 
     runs: dict[str, list[float]] = {n: [] for n in args.names}

@@ -116,14 +116,6 @@ def main() -> None:
         runs = {"new": [], "old": []}
         for _ in range(args.reps):
             for arm, sh in (("new", new_shapes), ("old", old_shapes)):
-                # clear persist-memos WITH the cache (bench.py's
-                # _clear_engine_caches contract): a cleared catalog
-                # with a stale memo handle silently degrades to the
-                # unpersisted double-evaluation shape
-                for mod in (S_new, S_old):
-                    kc = getattr(mod, "_KEYED_CACHE", None)
-                    if kc is not None:
-                        kc.clear()
                 spark.catalog.clearCache()
                 spark.sparkContext.setJobDescription(f"{name}:{arm}")
                 t0 = time.perf_counter()

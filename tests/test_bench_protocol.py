@@ -214,15 +214,8 @@ def test_watchdog_zero_row_deferral_predicate():
 
 
 def test_cache_clear_failure_is_noted_and_other_steps_run():
-    """A failing cache-clear step lands in the artifact's notes and does
-    not stop the other steps."""
-    from gpu_olap_engine_spark.operators import dedup as D
-
-    class Df:
-        unpersisted = False
-
-        def unpersist(self):
-            self.unpersisted = True
+    """A failing cache clear lands in the artifact's notes instead of
+    killing the bench."""
 
     class Catalog:
         def clearCache(self):
@@ -231,12 +224,6 @@ def test_cache_clear_failure_is_noted_and_other_steps_run():
     class Spark:
         catalog = Catalog()
 
-    df = Df()
-    D._SHINGLE_CACHE["probe"] = df
     notes: list[str] = []
-    try:
-        bench._clear_engine_caches(Spark(), notes)
-    finally:
-        D._SHINGLE_CACHE.pop("probe", None)
-    assert df.unpersisted and "probe" not in D._SHINGLE_CACHE
+    bench._clear_engine_caches(Spark(), notes)
     assert notes == ["cache clear catalog.clearCache: RuntimeError"]

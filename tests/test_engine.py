@@ -96,6 +96,21 @@ def test_query_result_cache(engine):
     assert engine._query_cache == {}
 
 
+def test_query_result_cache_cleared_on_catalog_change(engine):
+    """The result cache keys on SQL text, so a catalog change that
+    re-points a name must clear it: the same SQL then reads the new
+    data, not the rows cached for the old table."""
+    sql = "SELECT COUNT(*) AS c FROM reload_tmp"
+    engine.load_table("reload_tmp", f"{SF_SMALL}/region.parquet")
+    assert engine.execute_query_cached(sql).collect()[0]["c"] == 5
+    engine.load_table("reload_tmp", f"{SF_SMALL}/nation.parquet")
+    assert engine.execute_query_cached(sql).collect()[0]["c"] == 25
+    engine.register("reload_tmp", engine.spark.range(7))
+    assert engine.execute_query_cached(sql).collect()[0]["c"] == 7
+    engine.drop_table("reload_tmp")
+    assert engine._query_cache == {}
+
+
 def test_profile_table(engine):
     """Default profile is approximate (HLL++): distinct counts within
     rsd, null counts and extrema exact."""

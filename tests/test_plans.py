@@ -602,3 +602,63 @@ def test_scan_count_budget(spark, name):
         # means the entry stopped reading the relation at all — that
         # is a rewrite the budget should be updated for, not pass
         assert got >= 1, f"{name}: {table} no longer scanned"
+
+
+# Persist lint: a relation is persisted for the life of a query through
+# gpu_olap_engine_spark/persist.py, which releases it with the query's
+# result. The only other persists are these, each released by its own
+# code at a known point.
+PERSIST_ALLOWED = {
+    ("operators/graph.py", "pagerank_int"):
+        "edge and node relations reused by every iteration; "
+        "unpersisted before the operator returns",
+    ("operators/similarity.py", "kmeans_centroids"):
+        "training sample rescanned by every Lloyd iteration; "
+        "unpersisted before the operator returns",
+    ("operators/similarity.py", "pq_codebooks"):
+        "per-subspace slices rescanned by every iteration; "
+        "unpersisted before the operator returns",
+    ("engine.py", "load_table"):
+        "the reference's small-table RAM cache (catalog.rs:49-59), "
+        "held for the life of the registered table",
+    ("engine.py", "execute_query_cached"):
+        "the SQL result cache, released by clear_query_cache on "
+        "request and on every catalog change",
+}
+
+
+def test_persist_only_through_query_scope():
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "gpu_olap_engine_spark"
+    found, stray = set(), []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "persist.py":
+            continue
+
+        def visit(node, fn_name):
+            for child in ast.iter_child_nodes(node):
+                name = fn_name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    name = child.name if fn_name is None else fn_name
+                if (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in ("persist", "cache")
+                ):
+                    key = (rel, name)
+                    if key in PERSIST_ALLOWED:
+                        found.add(key)
+                    else:
+                        stray.append(f"{rel}:{child.lineno} in {name}")
+                visit(child, name)
+
+        visit(ast.parse(path.read_text()), None)
+    assert not stray, (
+        "persist through gpu_olap_engine_spark.persist.persist (released "
+        f"with the query's result), not a bare .persist()/.cache(): {stray}"
+    )
+    # an allow-list entry whose persist is gone must go too
+    assert found == set(PERSIST_ALLOWED), set(PERSIST_ALLOWED) - found
