@@ -93,6 +93,7 @@ class OlapEngine:
             apply_runtime_confs(self.spark, self.config)
         self._catalog: dict[str, TableMetadata] = {}
         self._query_cache: dict[str, DataFrame] = {}
+        self._table_cache: dict[str, DataFrame] = {}
 
     # -- catalog ------------------------------------------------------
 
@@ -103,14 +104,17 @@ class OlapEngine:
         count). Tables under ``cache_row_threshold`` rows are cached
         when ``enable_cache`` — the analog of the reference's <10M-row
         RAM cache (catalog.rs:49-59); at 100 TB fact tables exceed the
-        threshold and stream from storage, exactly as intended.
+        threshold and stream from storage, exactly as intended. Re-pointing
+        a name releases the cache of the table it named before.
         """
         self.clear_query_cache()
+        self._release_table_cache(name)
         df = self.spark.read.parquet(path)
         row_count = df.count()  # metadata-only for plain parquet scans
         cached = False
         if self.config.enable_cache and row_count < self.config.cache_row_threshold:
             df = df.cache()
+            self._table_cache[name] = df
             cached = True
         df.createOrReplaceTempView(name)
         meta = TableMetadata(name, path, df.schema, row_count, cached)
@@ -120,6 +124,7 @@ class OlapEngine:
     def register(self, name: str, df: DataFrame) -> None:
         """Register an arbitrary DataFrame as a queryable table."""
         self.clear_query_cache()
+        self._release_table_cache(name)
         df.createOrReplaceTempView(name)
         self._catalog[name] = TableMetadata(name, "<dataframe>", df.schema, -1, False)
 
@@ -133,10 +138,20 @@ class OlapEngine:
         return self._catalog[name].schema
 
     def drop_table(self, name: str) -> None:
-        """catalog.rs:111-116 analog."""
+        """catalog.rs:111-116 analog; releases the table's cache."""
         self.clear_query_cache()
+        self._release_table_cache(name)
         self._catalog.pop(name)
         self.spark.catalog.dropTempView(name)
+
+    def _release_table_cache(self, name: str) -> None:
+        """Unpersist the cache `name` holds, unless another loaded name
+        holds the same table (Spark keeps one cache entry per plan)."""
+        df = self._table_cache.pop(name, None)
+        if df is not None and not any(
+            df.sameSemantics(other) for other in self._table_cache.values()
+        ):
+            df.unpersist()
 
     def table(self, name: str) -> DataFrame:
         return self.spark.table(name)
@@ -283,8 +298,9 @@ class OlapEngine:
 
     def query_arrow(self, table: Any, sql: str, view_name: str = "df") -> Any:
         """Arrow-table in, Arrow-table out (record_batch interchange,
-        arrow-interop/src/record_batch_convert.rs:22-33 analog)."""
-        sdf = self.spark.createDataFrame(table.to_pandas())
+        arrow-interop/src/record_batch_convert.rs:22-33 analog). The
+        table goes to Spark as Arrow, without a pandas round trip."""
+        sdf = self.spark.createDataFrame(table)
         sdf.createOrReplaceTempView(view_name)
         try:
             return self.spark.sql(sql).toArrow()

@@ -19,6 +19,12 @@ IVF idea: candidates shrink ~2^bits-fold before scoring; at 100 TB the
 bucket column becomes a partition key so a probe touches one
 partition. A pyspark.ml random-hyperplane LSH variant lives in
 queries/similarity.py as the library path.
+
+Construction rule (operators/dedup.py): per-call derives are parsed
+SQL (_centroid_dists, _lsh_sigs, _blocked_groups' tiling transform),
+not Column trees — each Column node or Python lambda is a driver ->
+JVM gateway call of about 0.2-0.5 ms, a parsed expression a handful
+whatever its size.
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gpu_olap_engine_spark.persist import persist, query_scoped
+from gpu_olap_engine_spark.queries.tables import qident
 
 SCALE = 1e12  # term quantization: floor(x*y*SCALE) summed as int64
 
@@ -223,14 +230,6 @@ def bucketed_topk(
     )
 
 
-def _qident(name: str) -> str:
-    """Backtick-quoted SQL identifier with embedded backticks escaped
-    (ADVICE r13 #1): every fragment call site that interpolates a
-    column name goes through here so a pathological name breaks
-    nothing (it would previously terminate the quoting early)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _dlit(x: float) -> str:
     """Exact SQL double literal. repr() emits the shortest decimal
     that round-trips to the identical double, and the SQL lexer's
@@ -367,7 +366,7 @@ def kmeans_centroids(
         for _ in range(iters):
             assigned = work.select(
                 F.col(vec_col).alias("v"),
-                _nearest_centroid(_qident(vec_col), centroids).alias("c"),
+                _nearest_centroid(qident(vec_col), centroids).alias("c"),
             )
             sums = assigned.groupBy("c").agg(
                 F.count("*").alias("n"), *sum_cols
@@ -417,7 +416,7 @@ def kmeans_ivf_topk(
     c = spread(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
-        _nearest_centroid(_qident(vec_col), cents).alias("cluster"),
+        _nearest_centroid(qident(vec_col), cents).alias("cluster"),
     )
     # query probes: distributed — centroids (k x dim scalars) embed as
     # literals, each query row computes all k distances JVM-side, sorts
@@ -428,7 +427,7 @@ def kmeans_ivf_topk(
         F.col(vec_col).cast("array<double>").alias("q_vec"),
         F.explode(
             F.slice(
-                F.array_sort(_centroid_dists(_qident(vec_col), cents)), 1, nprobe
+                F.array_sort(_centroid_dists(qident(vec_col), cents)), 1, nprobe
             )
         ).alias("probe"),
     ).select("query_id", "q_vec", F.col("probe.ci").alias("cluster"))
@@ -542,8 +541,8 @@ def hyperplane_lsh_pairs(
         )
     dim = len(head[0])
     planes = hyperplane_tables(n_tables, n_planes, dim)
-    vecs = spread(corpus).select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
+    vecs = spread(corpus).selectExpr(
+        f"{qident(id_col)} AS vid", f"{qident(vec_col)} AS vec"
     )
     # r14 (VERDICT r13 #4): the whole signature array is ONE parsed
     # SQL expression — see _lsh_sigs for the arithmetic-parity
@@ -695,7 +694,7 @@ def pq_adc_topk(
         F.col(id_col).alias("neighbor_id"),
         *[
             _nearest_centroid(
-                f"slice({_qident(vec_col)}, {j * sub + 1}, {sub})", books[j]
+                f"slice({qident(vec_col)}, {j * sub + 1}, {sub})", books[j]
             ).alias(f"c{j}")
             for j in range(m)
         ],
@@ -713,7 +712,7 @@ def pq_adc_topk(
                 "array("
                 + ",".join(
                     _sq_l2_sql(
-                        f"slice({_qident(vec_col)}, {j * sub + 1}, {sub})", c
+                        f"slice({qident(vec_col)}, {j * sub + 1}, {sub})", c
                     )
                     for c in books[j]
                 )
@@ -1284,8 +1283,8 @@ def _near_dup_keyed(
     pins the full relation against the Catalyst form."""
     from gpu_olap_engine_spark.queries.tables import spread
 
-    vecs = spread(corpus).select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
+    vecs = spread(corpus).selectExpr(
+        f"{qident(id_col)} AS vid", f"{qident(vec_col)} AS vec"
     )
 
     def derive(batches):
@@ -1395,8 +1394,8 @@ def _near_dup_keyed(
         "vid long, qvec array<float>, mlo long, mhi long, "
         "keys array<long>",
     )
-    return one_per_vec.select(
-        "vid", "qvec", "mlo", "mhi", F.explode("keys").alias("bkey")
+    return one_per_vec.selectExpr(
+        "vid", "qvec", "mlo", "mhi", "explode(keys) AS bkey"
     )
 
 
@@ -1429,28 +1428,22 @@ def _blocked_groups(
     cols = ["bkey", "vid", "qvec"] + (
         ["mlo", "mhi"] if "mlo" in keyed.columns else []
     )
-    sizes = keyed.groupBy("bkey").agg(F.count("*").alias("bsz"))
+    sizes = keyed.groupBy("bkey").agg(F.expr("count(*) AS bsz"))
     nch = (
-        F.when(F.col("bsz") <= max_bucket, F.lit(1))
-        .otherwise(F.ceil(F.col("bsz") / chunk))
-        .cast("int")
+        f"CAST(CASE WHEN bsz <= {max_bucket} THEN 1 "
+        f"ELSE ceil(bsz / {chunk}) END AS INT)"
     )
-    ck = F.pmod(F.xxhash64(F.col("vid")), F.col("nch")).cast("int")
-    groups = F.transform(
-        F.sequence(F.lit(0), F.col("nch") - 1),
-        lambda o: F.struct(
-            F.least(ck, o).alias("gi"), F.greatest(ck, o).alias("gj")
-        ),
+    ck = "CAST(pmod(xxhash64(vid), nch) AS INT)"
+    groups = (
+        "transform(sequence(0, nch - 1), "
+        f"o -> struct(least({ck}, o) AS gi, greatest({ck}, o) AS gj))"
     )
     return (
         keyed.join(F.broadcast(sizes), "bkey")
-        .withColumn("nch", nch)
-        .withColumn("ck", ck)
-        .select(*cols, "ck", F.explode(groups).alias("g"))
-        .select(
-            *cols, "ck",
-            F.col("g.gi").alias("gi"), F.col("g.gj").alias("gj"),
-        )
+        .withColumn("nch", F.expr(nch))
+        .withColumn("ck", F.expr(ck))
+        .selectExpr(*cols, "ck", f"explode({groups}) AS g")
+        .selectExpr(*cols, "ck", "g.gi AS gi", "g.gj AS gj")
     )
 
 
@@ -1497,7 +1490,7 @@ def semdedup(
     m = spread(corpus).select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("vec"),
-        _nearest_centroid(_qident(vec_col), cents).alias("cluster"),
+        _nearest_centroid(qident(vec_col), cents).alias("cluster"),
     )
     keyed = m.select(
         F.col("vec_id").alias("vid"),

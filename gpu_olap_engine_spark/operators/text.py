@@ -6,6 +6,11 @@ deterministic by design so the DuckDB oracle reproduces them exactly.
 These are the Spark-idiomatic analog of the reference's "custom CUDA
 kernel" extension point (README.md:354-378): per-row compute fused
 into whole-stage codegen instead of a hand-launched kernel.
+
+Construction rule (operators/dedup.py): quality_features, a chain
+stage run once per shard, is one parsed SQL projection — the same
+expression tree as Column helpers would build, in ~30 gateway calls
+(each ~0.2-0.5 ms) instead of ~400.
 """
 
 from __future__ import annotations
@@ -13,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gpu_olap_engine_spark.operators.dedup import base_hash, tokenize
+from gpu_olap_engine_spark.operators.dedup import _tokenize_sql, base_hash, tokenize
+from gpu_olap_engine_spark.queries.tables import qident
 
 FP_P = 2_147_483_647  # fingerprint modulus (2^31-1)
 
@@ -89,26 +95,28 @@ def quality_features(
     ``keep`` lists extra input columns carried through unchanged
     (e.g. a language label for per-language thresholds downstream).
     """
-    text = F.col(text_col)
-    toks = tokenize(text)
-    n_tok = F.size(toks).cast("long")
-    n_stop = F.size(F.filter(toks, lambda w: w.isin(*STOPWORDS))).cast("long")
-    n_chars = F.length(text).cast("long")
-    n_punct = F.length(F.regexp_replace(text, f"[^{PUNCT_CLASS[1:-1]}]", "")).cast("long")
-    stop_ratio = n_stop.cast("double") / n_tok
-    punct_ratio = n_punct.cast("double") / n_chars
-    len_score = F.least(n_tok, F.lit(100)).cast("double") / 100
-    return df.select(
-        F.col(id_col),
-        *[F.col(c) for c in keep],
-        n_tok.alias("n_tokens"),
-        n_stop.alias("n_stopwords"),
-        n_punct.alias("n_punct"),
-        stop_ratio.alias("stopword_ratio"),
-        punct_ratio.alias("punct_ratio"),
-        (0.5 * stop_ratio + 0.3 * len_score + 0.2 * (1 - punct_ratio)).alias(
-            "quality_score"
-        ),
+    text = qident(text_col)
+    toks = _tokenize_sql(text)
+    stops = ", ".join(f"'{w}'" for w in STOPWORDS)
+    n_tok = f"CAST(size({toks}) AS BIGINT)"
+    n_stop = f"CAST(size(filter({toks}, w -> w IN ({stops}))) AS BIGINT)"
+    n_chars = f"CAST(length({text}) AS BIGINT)"
+    n_punct = (
+        f"CAST(length(regexp_replace({text}, '[^{PUNCT_CLASS[1:-1]}]', '')) AS BIGINT)"
+    )
+    stop_ratio = f"(CAST({n_stop} AS DOUBLE) / {n_tok})"
+    punct_ratio = f"(CAST({n_punct} AS DOUBLE) / {n_chars})"
+    len_score = f"(CAST(least({n_tok}, 100) AS DOUBLE) / 100)"
+    return df.selectExpr(
+        qident(id_col),
+        *map(qident, keep),
+        f"{n_tok} AS n_tokens",
+        f"{n_stop} AS n_stopwords",
+        f"{n_punct} AS n_punct",
+        f"{stop_ratio} AS stopword_ratio",
+        f"{punct_ratio} AS punct_ratio",
+        f"{stop_ratio} * 0.5D + {len_score} * 0.3D + (1 - {punct_ratio}) * 0.2D "
+        "AS quality_score",
     )
 
 

@@ -118,11 +118,14 @@ def dedup_exact_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle on the key; at 100 TB the key should be a hash of the
     full normalized text (same plan shape)."""
     docs = T(spark, sf_dir, "documents")
-    key3 = F.concat_ws(" ", F.slice(D.tokenize(F.col("text")), 1, 3))
+    key3 = f"concat_ws(' ', slice({D._tokenize_sql('text')}, 1, 3))"
     return (
-        docs.select("doc_id", key3.alias("key3"))
+        docs.selectExpr("doc_id", f"{key3} AS key3")
         .groupBy("key3")
-        .agg(F.min("doc_id").cast("long").alias("keeper_id"), F.count("*").alias("n_docs"))
+        .agg(
+            F.expr("CAST(min(doc_id) AS BIGINT) AS keeper_id"),
+            F.expr("count(*) AS n_docs"),
+        )
     )
 
 
@@ -156,7 +159,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     must find; the oracle recomputes the identical pipeline in SQL."""
     return D.minhash_dedup_pairs(
         T(spark, sf_dir, "documents"), "doc_id", "text", k=3, threshold=0.5
-    ).select(F.col("id_a").cast("long"), F.col("id_b").cast("long"), "jaccard")
+    ).selectExpr("CAST(id_a AS BIGINT) AS id_a", "CAST(id_b AS BIGINT) AS id_b", "jaccard")
 
 
 @register(

@@ -14,35 +14,79 @@ the DuckDB oracle's):
 * Timestamps in output are converted to epoch seconds (BIGINT) where
   practical to dodge datetime unit mismatches.
 * Every ORDER BY ... LIMIT has a unique tiebreaker column.
+
+Construction rule: fixture reads pin their schema (SCHEMAS), so no
+plan build runs a schema-inference job, and the operators write their
+per-call derives as parsed SQL (see operators/dedup.py): a Column node
+or Python lambda costs a driver -> JVM gateway call of about
+0.2-0.5 ms.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
+# One DDL schema per fixture table, equal to what parquet inference
+# yields on every fixture set (pinned by
+# tests/test_plans.py::test_pinned_schemas_match_parquet). Reading
+# through a given schema skips Spark's schema-inference job — a
+# one-task footer read that cost ~0.1 s per T() call against ~0.02 s
+# pinned — so building a plan over fixture tables runs no Spark job.
+SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, "
+        "l_tax DOUBLE, l_returnflag STRING, l_linestatus STRING, "
+        "l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table. Plain parquet scan: Catalyst pushes
-    filters and prunes columns into it (verified in tests/test_plans).
+    """Load one fixture table through its pinned schema (SCHEMAS).
+    Plain parquet scan: Catalyst pushes filters and prunes columns
+    into it (verified in tests/test_plans).
 
-    events.ts is parquet TIMESTAMP(NANOS), which Spark rejects outright
-    (PARQUET_TYPE_ILLEGAL); it is read as an int64 of nanoseconds
-    (nanosAsLong) and truncated to a microsecond TimestampType — the
-    same truncation DuckDB applies casting TIMESTAMP_NS -> TIMESTAMP.
+    The timestamp columns are microsecond parquet TIMESTAMPs without a
+    UTC adjustment, i.e. TIMESTAMP_NTZ. The reader also accepts a
+    UTC-adjusted column there (the session time zone is UTC), widens
+    narrower integers, and returns NULL for a column a file lacks.
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
+
+
+def qident(name: str) -> str:
+    """Backtick-quoted SQL identifier with embedded backticks escaped
+    (ADVICE r13 #1): every SQL fragment that interpolates a column
+    name goes through here so a pathological name breaks nothing (it
+    would otherwise terminate the quoting early)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 import itertools as _itertools

@@ -11,7 +11,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_olap_engine_spark.operators import text as X
-from gpu_olap_engine_spark.persist import persist
 from gpu_olap_engine_spark.queries import register
 from gpu_olap_engine_spark.queries.tables import T, spread
 
@@ -207,15 +206,16 @@ def q76_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor (gibberish detector), punctuation ceiling (markup/code
     detector), and duplicate-3-gram ceiling (repetition detector) —
     the standard rule stack a curation pipeline applies before any
-    model-based scoring. One scan + the (persisted) shingle pass; every
-    rule is a per-document expression, so the gate is reshard-stable
-    and embarrassingly parallel at 100 TB."""
+    model-based scoring. One scan + the shingle pass; every rule is a
+    per-document expression, so the gate is reshard-stable and
+    embarrassingly parallel at 100 TB. The shingle relation has one
+    consumer (the per-document count), so it is not persisted."""
     from gpu_olap_engine_spark.operators import dedup as D
 
     docs = T(spark, sf_dir, "documents")
     feats = X.quality_features(spread(docs), "doc_id", "text")
     d3 = (
-        persist(D.shingles(docs, "doc_id", "text", 3))
+        D.shingles(docs, "doc_id", "text", 3)
         .groupBy("id")
         .agg(F.count("*").alias("n_distinct"))
     )

@@ -23,8 +23,7 @@ SHOW = [
     ("sim_near_dup_pairs", "inverted-index blocking + verify (no all-pairs join)"),
     (
         "sim_decontaminate",
-        "train x eval cross verify: one keyed derive, persisted, both sides filter it "
-        "(formatted explain draws the eval side's cache read as a bare derive)",
+        "train x eval cross verify: one keyed derive, persisted, both sides filter it",
     ),
     (
         "sim_random_hyperplane_lsh",

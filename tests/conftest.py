@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import threading
+import types
 
 import duckdb
 import pytest
@@ -42,3 +44,24 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture
+def gateway_calls(spark, monkeypatch):
+    """Counts the driver -> JVM gateway calls the test's thread makes:
+    every py4j command (a Column node, a method call) passes through
+    the gateway client's send_command. Other threads are left out
+    (py4j releases dead objects from a thread of its own, whenever it
+    gets to them). Reset `.n` to count a section."""
+    client = spark.sparkContext._gateway._gateway_client
+    counter = types.SimpleNamespace(n=0)
+    send = client.send_command
+    me = threading.get_ident()
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == me:
+            counter.n += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return counter

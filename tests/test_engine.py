@@ -111,6 +111,53 @@ def test_query_result_cache_cleared_on_catalog_change(engine):
     assert engine._query_cache == {}
 
 
+def test_reload_and_drop_release_table_cache(spark):
+    """load_table caches small tables; re-pointing the name and dropping
+    it release each cache it held, so neither outlives its name."""
+    from pyspark import StorageLevel
+
+    eng = OlapEngine(EngineConfig(shuffle_partitions=8), spark=spark)
+    region = spark.read.parquet(f"{SF_SMALL}/region.parquet")
+    nation = spark.read.parquet(f"{SF_SMALL}/nation.parquet")
+    eng.load_table("t_release", f"{SF_SMALL}/region.parquet")
+    assert eng.execute_query("SELECT COUNT(*) AS c FROM t_release").collect()[0]["c"] == 5
+    assert region.storageLevel != StorageLevel.NONE
+    eng.load_table("t_release", f"{SF_SMALL}/nation.parquet")
+    assert region.storageLevel == StorageLevel.NONE
+    assert nation.storageLevel != StorageLevel.NONE
+    eng.drop_table("t_release")
+    assert nation.storageLevel == StorageLevel.NONE
+
+
+def test_query_arrow_matches_pandas_path(engine):
+    """query_arrow hands the Arrow table to Spark directly: NULLs, a
+    date and a double come back as they did through to_pandas(), and an
+    integer column with a NULL stays an integer (pandas made it a
+    double)."""
+    import datetime
+
+    import pyarrow as pa
+
+    t = pa.table({
+        "d": pa.array([datetime.date(2024, 1, 1), None, datetime.date(1999, 12, 31)]),
+        "x": pa.array([1.5, None, -0.25], pa.float64()),
+        "s": pa.array(["a", None, "b"]),
+        "n": pa.array([1, None, 3], pa.int64()),
+    })
+    sql = "SELECT d, x, s, date_add(d, 1) AS d1, x * 2 AS x2, n FROM df ORDER BY s NULLS FIRST"
+    got = engine.query_arrow(t, sql)
+    engine.spark.createDataFrame(t.to_pandas()).createOrReplaceTempView("df")
+    try:
+        want = engine.spark.sql(sql).toArrow()
+    finally:
+        engine.spark.catalog.dropTempView("df")
+    cols = ["d", "x", "s", "d1", "x2"]
+    assert got.select(cols).equals(want.select(cols))
+    assert got.column("x").null_count == 1 and got.column("d").null_count == 1
+    assert got.schema.field("n").type == pa.int64()
+    assert got.column("n").to_pylist() == [None, 1, 3]
+
+
 def test_profile_table(engine):
     """Default profile is approximate (HLL++): distinct counts within
     rsd, null counts and extrema exact."""

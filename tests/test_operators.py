@@ -845,6 +845,7 @@ def test_clamped_stock_closed_form_matches_simulation(spark, tmp_path):
     import pandas as pd
 
     from gpu_olap_engine_spark.queries import load_all
+    from gpu_olap_engine_spark.queries.tables import SCHEMAS
 
     rng = random.Random(11)
     rows = []
@@ -876,9 +877,10 @@ def test_clamped_stock_closed_form_matches_simulation(spark, tmp_path):
         "l_returnflag", "l_linestatus", "l_shipdate",
     ]
     sf_dir = str(tmp_path / "sf")
-    spark.createDataFrame(pd.DataFrame(rows, columns=cols)).coalesce(
-        1
-    ).write.parquet(f"{sf_dir}/lineitem.parquet")
+    # written with the fixture's column types: fixture reads pin them
+    spark.createDataFrame(
+        pd.DataFrame(rows, columns=cols), SCHEMAS["lineitem"]
+    ).coalesce(1).write.parquet(f"{sf_dir}/lineitem.parquet")
     got = {
         r.part: (r.final_stock, r.lost_units)
         for r in load_all()["q170_clamped_stock"].fn(spark, sf_dir).collect()
