@@ -145,12 +145,9 @@ class OlapEngine:
         self.spark.catalog.dropTempView(name)
 
     def _release_table_cache(self, name: str) -> None:
-        """Unpersist the cache `name` holds, unless another loaded name
-        holds the same table (Spark keeps one cache entry per plan)."""
+        """Unpersist the cache `name` holds, if any."""
         df = self._table_cache.pop(name, None)
-        if df is not None and not any(
-            df.sameSemantics(other) for other in self._table_cache.values()
-        ):
+        if df is not None:
             df.unpersist()
 
     def table(self, name: str) -> DataFrame:

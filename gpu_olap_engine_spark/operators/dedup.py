@@ -16,8 +16,8 @@ are handled by AQE skew-join at runtime.
 
 Construction rule: the derives the curation chain builds per call
 (minhash_docs, lsh_candidate_pairs, jaccard_verify) are written as
-parsed SQL (selectExpr / F.expr over the _*_sql twins of tokenize,
-base_hash and _shingle_array), and fixture reads pin their schema
+parsed SQL (selectExpr / F.expr over _shingle_sql and the SQL twins
+of tokenize and base_hash), and fixture reads pin their schema
 (queries/tables.py). Every Column node and Python lambda is a
 driver -> JVM gateway call of about 0.2-0.5 ms; a parsed expression
 is a handful of calls whatever its size. dedup_minhash_lsh went from
@@ -82,6 +82,12 @@ def base_hash(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
+# SQL twins of tokenize and base_hash for the parsed-SQL derives: the
+# Column helpers take any Column, which a SQL string cannot embed, so
+# both forms exist; tests/test_operators.py::test_sql_twins_match_column_helpers
+# pins them equal on NULL, empty, short and multi-space texts.
+
+
 def _tokenize_sql(text: str) -> str:
     """SQL twin of tokenize over a SQL operand (same expression tree)."""
     return f"split(lower(trim({text})), '\\\\s+')"
@@ -93,19 +99,9 @@ def _base_hash_sql(s: str) -> str:
 
 
 def _shingle_sql(words: str, k: int) -> str:
-    """SQL twin of _shingle_array over a token-array column name (same
-    expression tree)."""
-    return (
-        f"array_distinct(CASE WHEN size({words}) >= {k} THEN "
-        f"transform(sequence(1, size({words}) - {k - 1}), "
-        f"i -> concat_ws(' ', slice({words}, i, {k}))) "
-        f"ELSE array(concat_ws(' ', {words})) END)"
-    )
-
-
-def _shingle_array(words: Column, k: int) -> Column:
-    """Distinct k-word shingles of a token-array column; a document
-    shorter than k words is one shingle, its whole (joined) text.
+    """Distinct k-word shingles of a token-array column (a SQL column
+    name); a document shorter than k words is one shingle, its whole
+    (joined) text.
 
     ``words`` must be a materialized column, not an expression (r12):
     interpreted higher-order lambdas do not CSE, so slice(tokenize(
@@ -114,14 +110,11 @@ def _shingle_array(words: Column, k: int) -> Column:
     array is deduped in place: duplicates can only occur within one
     document, so array_distinct gives exact set semantics with zero
     shuffle."""
-    return F.array_distinct(
-        F.when(
-            F.size(words) >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.size(words) - (k - 1)),
-                lambda i: F.concat_ws(" ", F.slice(words, i, k)),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", words)))
+    return (
+        f"array_distinct(CASE WHEN size({words}) >= {k} THEN "
+        f"transform(sequence(1, size({words}) - {k - 1}), "
+        f"i -> concat_ws(' ', slice({words}, i, {k}))) "
+        f"ELSE array(concat_ws(' ', {words})) END)"
     )
 
 
@@ -134,12 +127,10 @@ def shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame
     """
     from gpu_olap_engine_spark.queries.tables import spread
 
-    base = spread(df).select(
-        F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("w")
+    base = spread(df).selectExpr(
+        f"{qident(id_col)} AS id", f"{_tokenize_sql(qident(text_col))} AS w"
     )
-    return base.select(
-        "id", F.explode(_shingle_array(F.col("w"), k)).alias("shingle")
-    )
+    return base.selectExpr("id", f"explode({_shingle_sql('w', k)}) AS shingle")
 
 
 def minhash_signatures(shingle_df: DataFrame) -> DataFrame:

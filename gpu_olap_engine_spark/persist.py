@@ -9,18 +9,16 @@ follows the result, not the return. Nested scoped calls join the
 outermost scope. Nothing outlives its result, so a later query over
 rewritten parquet files never reads an earlier materialization.
 
-Spark keeps one cache entry per plan: persisting a relation that
-another live scope already persisted (same plan, e.g. two entries
-deriving the same keyed relation) shares that entry. A release
-therefore unpersists only when no other live scope holds a relation
-with the same plan; otherwise the first result to die would evict
-the entry under the other query, whose plan then re-derives the
-relation.
+Spark keeps one cache entry per plan, so two live scopes that persist
+the same plan share it and the first release evicts it: the other
+query then re-derives the relation (correct, slower). No workload here
+keeps two such queries alive at once; a caller that builds one query
+after another collects the earlier result first (gc.collect()) so its
+release cannot land mid-build.
 """
 
 from __future__ import annotations
 
-import contextlib
 import contextvars
 import functools
 import threading
@@ -32,23 +30,6 @@ from pyspark.sql import DataFrame
 _held: contextvars.ContextVar[list[DataFrame] | None] = contextvars.ContextVar(
     "query_persists", default=None
 )
-# Every relation persisted by a live scope, across threads and scopes,
-# and the lock that makes "persist" and "release unless shared" atomic.
-_live: list[DataFrame] = []
-_live_lock = threading.Lock()
-_live_owner: int | None = None  # the thread holding _live_lock
-
-
-@contextlib.contextmanager
-def _live_locked():
-    global _live_owner
-    me = threading.get_ident()
-    with _live_lock:
-        _live_owner = me
-        try:
-            yield
-        finally:
-            _live_owner = None
 
 
 def persist(df: DataFrame) -> DataFrame:
@@ -58,39 +39,24 @@ def persist(df: DataFrame) -> DataFrame:
         raise RuntimeError(
             "persist() outside a query scope: wrap the entry point in @query_scoped"
         )
-    with _live_locked():
-        held.append(df.persist())
-        _live.append(df)
+    held.append(df.persist())
     return df
 
 
 def unpersist_all(held: list[DataFrame]) -> None:
-    """Release every relation in `held`: unpersist it unless another
-    live scope holds one with the same plan; a no-op on a stopped
-    session."""
+    """Unpersist every relation in `held`; a no-op on a stopped session."""
     for df in held:
-        with _live_locked():
-            _live.remove(df)
-            sc = df.sparkSession.sparkContext
-            if sc._jsc is None:
-                continue
-            if not any(
-                o.sparkSession.sparkContext is sc and df.sameSemantics(o)
-                for o in _live
-            ):
-                df.unpersist()
+        if df.sparkSession.sparkContext._jsc is not None:
+            df.unpersist()
 
 
 def _release(held: list[DataFrame]) -> None:
     # A finalizer can fire inside the cyclic collector, in the middle of
     # another gateway call on this thread, and py4j's per-thread
     # connection is not reentrant: unpersist on a thread of its own.
-    # It can also fire while this thread holds _live_lock (inside a
-    # persist or a release); joining then would wait on ourselves.
     t = threading.Thread(target=unpersist_all, args=(held,))
     t.start()
-    if _live_owner != threading.get_ident():
-        t.join()
+    t.join()
 
 
 def query_scoped(fn):

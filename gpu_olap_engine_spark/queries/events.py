@@ -5,9 +5,10 @@ paging, README.md:12,340-352); these are the batch twins of the
 Structured Streaming surface in ``gpu_olap_engine_spark.streaming`` —
 same window/session/dedup semantics, oracle-checkable via DuckDB.
 
-Timestamps: events.ts is parquet timestamp[ns]; both engines are
-normalized to epoch MICROseconds (BIGINT) before any arithmetic, so
-bucket math is pure integer ops and cross-engine deterministic.
+Timestamps: events.ts is a microsecond parquet timestamp without UTC
+adjustment (TIMESTAMP_NTZ in Spark); both engines are normalized to
+epoch MICROseconds (BIGINT) before any arithmetic, so bucket math is
+pure integer ops and cross-engine deterministic.
 """
 
 from __future__ import annotations

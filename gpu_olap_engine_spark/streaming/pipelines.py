@@ -11,24 +11,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+
+from gpu_olap_engine_spark.queries.tables import SCHEMAS
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the events fixture with ts normalized to
-    a microsecond TimestampType (LTZ — watermarks reject NTZ).
+    """File-source stream of the events fixture with ts as a
+    microsecond TimestampType (LTZ — watermarks reject NTZ).
 
-    Type-adaptive like the batch loader (queries.tables.T): the stream
-    schema is taken from a batch footer read, so the pipeline works
-    whether the fixture stores ts as timestamp[us] (current, read back
-    as TIMESTAMP_NTZ) or as TIMESTAMP(NANOS) read back as int64 nanos
-    (nanosAsLong). The session timezone is pinned UTC (config.py), so
-    the NTZ->LTZ cast is value-faithful."""
+    The stream reads through the fixture's pinned schema, like the
+    batch loader (queries.tables.T): ts is a microsecond
+    TIMESTAMP_NTZ, cast to LTZ here. The session timezone is pinned UTC
+    (config.py), so the cast is value-faithful."""
     import os
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = SCHEMAS["events"]
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
     if os.path.isdir(path):
         # multi-file table (e.g. the ~sf1 replica): stream the table
         # directory itself
@@ -41,12 +39,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    ts_type = schema["ts"].dataType
-    if isinstance(ts_type, LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(ts_type, TimestampNTZType):
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def windowed_counts(

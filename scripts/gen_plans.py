@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 
@@ -134,6 +135,11 @@ def main() -> None:
             "```",
             "",
         ]
+        # release this entry's persists before the next is built: Spark
+        # keeps one cache entry per plan, so a late release of a shared
+        # relation would evict it under the next entry's plan
+        del df
+        gc.collect()
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "PLANS.md"), "w") as f:
         f.write("\n".join(out))

@@ -62,6 +62,24 @@ def test_shingles_output_unchanged(spark):
     }
 
 
+def test_sql_twins_match_column_helpers(spark):
+    """The parsed-SQL twins of tokenize and base_hash (used by
+    minhash_docs, quality_features and dedup_exact_key's key) build
+    the same expression as the Column helpers and give the same values
+    on NULL, empty, short, multi-space and tab/newline texts."""
+    docs = _edge_docs(spark).union(
+        spark.createDataFrame([(7, "Tab\tand\nnew  line")], "doc_id long, text string")
+    )
+    for col, sql in (
+        (D.tokenize(F.col("text")), D._tokenize_sql("text")),
+        (D.base_hash(F.col("text")), D._base_hash_sql("text")),
+    ):
+        a = docs.select("doc_id", col.alias("v"))
+        b = docs.select("doc_id", F.expr(sql).alias("v"))
+        assert a.sameSemantics(b), sql
+        assert sorted(a.collect()) == sorted(b.collect()), sql
+
+
 @pytest.mark.parametrize("src", [SF_SMALL, SF_ORACLE, "edge"])
 def test_minhash_docs_match_exploded_signatures(spark, src):
     """The per-document arrays give every document the signature

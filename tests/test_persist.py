@@ -14,7 +14,6 @@ from pyspark import StorageLevel
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from gpu_olap_engine_spark.persist import persist, query_scoped
-from gpu_olap_engine_spark.plans import plan_string
 from gpu_olap_engine_spark.queries import load_all
 from perfbench import gen
 from tests.conftest import SF_SMALL
@@ -114,71 +113,6 @@ def test_entry_persists_released_with_result(spark, monkeypatch, name):
     assert all(p.storageLevel == StorageLevel.NONE for p in persisted), (
         f"{name}: persisted relations outlive the result that needed them"
     )
-
-
-def test_shared_persist_survives_the_other_results_release(spark):
-    """Two live queries persist the same keyed relation (one Spark cache
-    entry). Dropping the first result must leave the entry to the
-    second: sim_decontaminate's plan keeps reading the cache, one
-    embeddings scan, instead of re-deriving its eval side."""
-    gc.collect()
-    base = _persistent_rdds(spark)
-    first = REGISTRY["sim_near_dup_pairs"].fn(spark, SF_SMALL)
-    second = REGISTRY["sim_decontaminate"].fn(spark, SF_SMALL)
-    del first
-    gc.collect()
-    assert plan_string(second).count("embeddings.parquet") == 1
-    second.write.format("noop").mode("overwrite").save()
-    del second
-    gc.collect()
-    assert _persistent_rdds(spark) == base
-
-
-def test_shared_persist_under_concurrent_scopes(spark):
-    """Threads persist the same relation in their own scopes and drop
-    their results at random points: while a thread's result is alive
-    the shared cache entry must stay, and the last release frees it."""
-    import random
-    import sys
-    import threading
-
-    def build():
-        return spark.range(3000).selectExpr("id % 13 AS k")
-
-    @query_scoped
-    def scoped(spark):
-        return persist(build()).groupBy("k").count()
-
-    errors = []
-
-    def client(seed):
-        rng = random.Random(seed)
-        try:
-            for _ in range(4):
-                r = scoped(spark)
-                if build().storageLevel == StorageLevel.NONE:
-                    errors.append("evicted while its result was alive")
-                if rng.random() < 0.5:
-                    assert len(r.collect()) == 13
-                del r
-                gc.collect()
-        except Exception as e:  # noqa: BLE001 - reported by the main thread
-            errors.append(repr(e))
-
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-5)
-    try:
-        threads = [threading.Thread(target=client, args=(i,)) for i in range(6)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=240)
-    finally:
-        sys.setswitchinterval(interval)
-    assert not any(t.is_alive() for t in threads)
-    assert not errors, errors
-    gc.collect()
-    assert build().storageLevel == StorageLevel.NONE
 
 
 def _write_shard(d: str, index: int) -> None:

@@ -599,6 +599,12 @@ SCAN_BUDGETS = {
 
 @pytest.mark.parametrize("name", sorted(SCAN_BUDGETS))
 def test_scan_count_budget(spark, name):
+    # Spark keeps one cache entry per plan: an earlier entry's result
+    # that persisted the same relation (sim_near_dup_pairs and
+    # sim_decontaminate share their keyed derive) would, when the
+    # cyclic collector releases it mid-build, evict the entry under
+    # this one. Collect it first.
+    gc.collect()
     plan = plan_of(REGISTRY[name].fn(spark, SF_ORACLE))
     for table, budget in SCAN_BUDGETS[name].items():
         got = plan.count(f"{table}.parquet")
