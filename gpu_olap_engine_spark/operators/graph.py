@@ -330,7 +330,7 @@ def pagerank_int(
     out-degree aggregation + join re-executing per round, i.e.
     (iters-1) extra full |E| scans+shuffles at scale (measured
     3.58 -> 2.97 s at sf0.1, faster on 6/6 paired reps,
-    scripts/r13_ab_pagerank_ew.py; the inner join to outdeg cannot
+    5d6d881:scripts/r13_ab_pagerank_ew.py; the inner join to outdeg cannot
     drop rows because outdeg is built from e's own srcs, so nodes
     derived from ew == nodes derived from e). ``localCheckpoint``
     after each round truncates lineage exactly as in

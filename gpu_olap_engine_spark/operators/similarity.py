@@ -30,6 +30,7 @@ whatever its size.
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -899,6 +900,54 @@ def _mask_gate(
     )
 
 
+class _GramSide(NamedTuple):
+    """One side of a Gram verify: ids, the exact float64 rows and norms,
+    the float32 unit rows the bound scan reads, and the gate's mask
+    words (None when ungated)."""
+
+    ids: np.ndarray
+    q: np.ndarray
+    nrm: np.ndarray
+    w32: np.ndarray
+    masks: tuple | None
+
+
+def _gram_side(pdf: pd.DataFrame, gated: bool) -> _GramSide:
+    q32 = np.stack(pdf["qvec"].to_numpy()).astype(np.float32)
+    q = q32.astype(np.float64)  # exact: integer-valued < 2^24
+    nrm = np.sqrt((q * q).sum(axis=1))  # exact integer sums
+    return _GramSide(
+        pdf["vid"].to_numpy(), q, nrm, _unit_rows_f32(q32, nrm),
+        _mask_words(pdf) if gated else None,
+    )
+
+
+def _exact_hits(bkey: int, a: _GramSide, b: _GramSide, r, c, threshold: float):
+    """(ids_a, ids_b, cosine) of the bound-scan survivors (r, c) that
+    pass the minimal-shared-key gate and the exact predicate: integer
+    dot, then the oracle's IEEE division."""
+    if a.masks is not None and len(r):
+        keep = _mask_gate(bkey, a.masks, b.masks, r, c)
+        r, c = r[keep], c[keep]
+    gex = np.einsum("ij,ij->i", a.q[r], b.q[c])  # exact ints
+    cos = gex / (a.nrm[r] * b.nrm[c])
+    keep = cos >= threshold
+    return a.ids[r][keep], b.ids[c][keep], cos[keep]
+
+
+def _gram_rect(bkey: int, a: _GramSide, b: _GramSide, threshold: float, block_rows: int):
+    """Every (a-row, b-row) pair with cosine >= threshold, scanned in
+    ``block_rows``-row slabs of a: normalized f32 bound scan (bare
+    compare, no outer matrix), then the exact predicate on survivors
+    only (see _f32_margin); scratch-buffered GEMM + compare (r12, see
+    _slab). Yields (ids_a, ids_b, cosine) per slab."""
+    tl = np.float32(threshold) - _f32_margin(a.q.shape[1], threshold)
+    for s in range(0, len(a.ids), block_rows):
+        e = min(s + block_rows, len(a.ids))
+        r, c = _bound_hits(a.w32, b.w32, tl, s, e)
+        yield _exact_hits(bkey, a, b, r + s, c, threshold)
+
+
 @query_scoped
 def near_dup_pairs(
     corpus: DataFrame,
@@ -1066,66 +1115,31 @@ def gram_pairs(
 
     def verify(key, pdf: pd.DataFrame) -> pd.DataFrame:
         bkey, gi, gj = key
-        out = []
         if gi == gj:  # within-chunk: strict-upper-triangle pairs
-            ids = pdf["vid"].to_numpy()
-            k = len(ids)
-            if k < 2:
+            if len(pdf) < 2:
                 return empty
-            q32 = np.stack(pdf["qvec"].to_numpy()).astype(np.float32)
-            q = q32.astype(np.float64)  # exact: integer-valued < 2^24
-            nrm = np.sqrt((q * q).sum(axis=1))  # exact integer sums
-            w32 = _unit_rows_f32(q32, nrm)
-            tl = np.float32(threshold) - _f32_margin(q.shape[1], threshold)
-            U = _mask_words(pdf) if gated else None
-            for s in range(0, k, block_rows):
-                e = min(s + block_rows, k)
+            a = _gram_side(pdf, gated)
+            tl = np.float32(threshold) - _f32_margin(a.q.shape[1], threshold)
+            hits = []
+            for s in range(0, len(a.ids), block_rows):
+                e = min(s + block_rows, len(a.ids))
                 # columns < s can never satisfy col > row here — skip
                 # them in the GEMM itself (halves the triangle's
                 # cells). r12: the strict-upper-triangle constraint
                 # moved from a per-slab bool matrix (`tri`, an O(cells)
                 # temporary) to a post-scan filter on the (rare)
                 # survivors — same pair set, no O(cells) allocation.
-                r, c = _bound_hits(w32, w32[s:], tl, s, e)
+                r, c = _bound_hits(a.w32, a.w32[s:], tl, s, e)
                 keep = c > r  # local coords: col > row <=> global too
-                r, c = r[keep] + s, c[keep] + s
-                if gated and len(r):
-                    keep = _mask_gate(bkey, U, U, r, c)
-                    r, c = r[keep], c[keep]
-                if len(r) == 0:
-                    continue
-                gex = np.einsum("ij,ij->i", q[r], q[c])  # exact ints
-                cos = gex / (nrm[r] * nrm[c])  # the oracle's division
-                keep = cos >= threshold
-                out.append(_emit(ids[r][keep], ids[c][keep], cos[keep]))
+                hits.append(_exact_hits(bkey, a, a, r[keep] + s, c[keep] + s, threshold))
         else:  # cross-chunk: full rectangle, each pair in ONE group
             pa, pb = pdf[pdf["ck"] == gi], pdf[pdf["ck"] == gj]
             if len(pa) == 0 or len(pb) == 0:
                 return empty
-            ida, idb = pa["vid"].to_numpy(), pb["vid"].to_numpy()
-            qa32 = np.stack(pa["qvec"].to_numpy()).astype(np.float32)
-            qb32 = np.stack(pb["qvec"].to_numpy()).astype(np.float32)
-            qa, qb = qa32.astype(np.float64), qb32.astype(np.float64)
-            na = np.sqrt((qa * qa).sum(axis=1))
-            nb = np.sqrt((qb * qb).sum(axis=1))
-            wa32 = _unit_rows_f32(qa32, na)
-            wb32 = _unit_rows_f32(qb32, nb)
-            tl = np.float32(threshold) - _f32_margin(qa.shape[1], threshold)
-            Ua = _mask_words(pa) if gated else None
-            Ub = _mask_words(pb) if gated else None
-            for s in range(0, len(ida), block_rows):
-                e = min(s + block_rows, len(ida))
-                r, c = _bound_hits(wa32, wb32, tl, s, e)
-                r = r + s
-                if gated and len(r):
-                    keep = _mask_gate(bkey, Ua, Ub, r, c)
-                    r, c = r[keep], c[keep]
-                if len(r) == 0:
-                    continue
-                gex = np.einsum("ij,ij->i", qa[r], qb[c])
-                cos = gex / (na[r] * nb[c])
-                keep = cos >= threshold
-                out.append(_emit(ida[r][keep], idb[c][keep], cos[keep]))
+            hits = _gram_rect(
+                bkey, _gram_side(pa, gated), _gram_side(pb, gated), threshold, block_rows
+            )
+        out = [_emit(ia, jb, cos) for ia, jb, cos in hits if len(cos)]
         return pd.concat(out, ignore_index=True) if out else empty
 
     result = grouped.groupBy("bkey", "gi", "gj").applyInPandas(
@@ -1201,42 +1215,16 @@ def gram_cross_pairs(
     )
 
     def verify(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        bkey = key[0]
         pa, pb = pdf[pdf["side"] == 0], pdf[pdf["side"] == 1]
         if len(pa) == 0 or len(pb) == 0:
             return empty
-        ida, idb = pa["vid"].to_numpy(), pb["vid"].to_numpy()
-        qa32 = np.stack(pa["qvec"].to_numpy()).astype(np.float32)
-        qb32 = np.stack(pb["qvec"].to_numpy()).astype(np.float32)
-        qa, qb = qa32.astype(np.float64), qb32.astype(np.float64)
-        na = np.sqrt((qa * qa).sum(axis=1))  # exact integer sums
-        nb = np.sqrt((qb * qb).sum(axis=1))
-        wa32 = _unit_rows_f32(qa32, na)
-        wb32 = _unit_rows_f32(qb32, nb)
-        tl = np.float32(threshold) - _f32_margin(qa.shape[1], threshold)
-        Ua = _mask_words(pa) if gated else None
-        Ub = _mask_words(pb) if gated else None
-        out = []
-        for s in range(0, len(ida), block_rows):
-            e = min(s + block_rows, len(ida))
-            # normalized f32 bound scan (bare compare, no outer
-            # matrix); exact integer dot + the oracle's IEEE division
-            # on survivors only (see _f32_margin); scratch-buffered
-            # GEMM + compare (r12, see _slab)
-            r, c = _bound_hits(wa32, wb32, tl, s, e)
-            r = r + s
-            if gated and len(r):
-                keep = _mask_gate(bkey, Ua, Ub, r, c)
-                r, c = r[keep], c[keep]
-            if len(r) == 0:
-                continue
-            gex = np.einsum("ij,ij->i", qa[r], qb[c])
-            cos = gex / (na[r] * nb[c])
-            keep = cos >= threshold
-            out.append(pd.DataFrame(
-                {"id_big": ida[r][keep], "id_small": idb[c][keep],
-                 "cosine": cos[keep]}
-            ))
+        hits = _gram_rect(
+            key[0], _gram_side(pa, gated), _gram_side(pb, gated), threshold, block_rows
+        )
+        out = [
+            pd.DataFrame({"id_big": ia, "id_small": jb, "cosine": cos})
+            for ia, jb, cos in hits if len(cos)
+        ]
         return pd.concat(out, ignore_index=True) if out else empty
 
     result = (
@@ -1414,7 +1402,7 @@ def _blocked_groups(
     so it broadcasts. A `keys` column (the minimal-shared-key gate's
     input) rides along when present.
 
-    r14 (guide §2.4/§4 — profiled in scripts/r14_prof_neardup.py):
+    r14 (guide §2.4/§4 — profiled in 5d6d881:scripts/r14_prof_neardup.py):
     `keyed` is read twice — bucket-size aggregate + the join back —
     and it is the operator's expensive relation (a Python mapInPandas
     derive for near-dup/decontaminate, a k-means assignment scan for

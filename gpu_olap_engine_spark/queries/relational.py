@@ -1227,7 +1227,7 @@ def q141(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |E|/shuffle-partitions and AQE skew-splitting works under SHJ;
     # sorting the wedge set is never the right side of that trade.
     # Paired A/B 6.11 -> 4.67 s min (5/5 reps), identical rows
-    # (scripts/r14_ab_q141_shj.py); hinting the wedge join too was
+    # (5d6d881:scripts/r14_ab_q141_shj.py); hinting the wedge join too was
     # measured WORSE (5.05 vs 4.73 — its inputs are the cheap side).
     tri = (
         ab.join(bc, F.col("ab.b") == F.col("bc.a"))
@@ -1437,7 +1437,7 @@ def q169(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialized legs), so re-materializing the whole
         # monotonically-growing set every round was pure extra writes
         # (O(|V| x rounds) at scale; 3.18 -> 2.91 s at sf0.1, faster on
-        # 5/6 paired reps, scripts/r13_ab_bfs_visited.py)
+        # 5/6 paired reps, 5d6d881:scripts/r13_ab_bfs_visited.py)
         visited = visited.unionAll(nxt)
         frontier = nxt
     return out.select(F.col("nd").alias("part"), "hop")
