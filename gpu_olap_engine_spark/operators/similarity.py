@@ -1113,7 +1113,9 @@ def gram_pairs(
             {"id_a": lo[good], "id_b": hi[good], "cosine": cos[good]}
         )
 
-    def verify(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # unannotated on purpose: hints on only some parameters make
+    # applyInPandas warn that it cannot infer the eval type
+    def verify(key, pdf):
         bkey, gi, gj = key
         if gi == gj:  # within-chunk: strict-upper-triangle pairs
             if len(pdf) < 2:
@@ -1214,7 +1216,9 @@ def gram_cross_pairs(
          "cosine": pd.Series([], dtype="float64")}
     )
 
-    def verify(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # unannotated on purpose: hints on only some parameters make
+    # applyInPandas warn that it cannot infer the eval type
+    def verify(key, pdf):
         pa, pb = pdf[pdf["side"] == 0], pdf[pdf["side"] == 1]
         if len(pa) == 0 or len(pb) == 0:
             return empty

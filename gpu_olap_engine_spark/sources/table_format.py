@@ -38,6 +38,15 @@ at ANY point before the link leaves the table at the old version with
 only orphaned (unreferenced) data files, which ``vacuum_table``
 removes.
 
+One commit step: every mutation only chooses which files to drop and
+what to write; ``_commit`` writes it as one txn directory and builds
+the next manifest. Files are the old list minus the dropped ones plus
+the new ones; stats are carried for the surviving files and read from
+the footers of the new files only; the schema, the app-id ledger and
+the Bloom column list carry forward (an append may widen the schema,
+an ``app_id`` advances its ledger entry). ``_commit`` is the only
+caller of ``_publish``, so a manifest field is decided in one place.
+
 At 100 TB the same design holds: the manifest is metadata-only
 (file names + stats), commits are O(1) renames on the metadata
 store, and MERGE/DELETE rewrite only the files that actually contain
@@ -76,10 +85,10 @@ k=7, ~1% false positives) in the manifest; ``read_snapshot`` /
 ``prune_files`` consult it for ``=`` conjuncts and drop files whose
 filter proves the value absent. This also covers STRING keys, which
 the range stats deliberately never prune on (footer truncation).
-Every mutation path (append / merge / delete / compact / CDC apply)
-rebuilds filters for the files it writes and carries the column list
-forward, so the skipping survives the table's whole lifecycle. False
-positives only ever ADD files to the scan — results never change.
+The one commit step builds filters for the files each commit writes
+and carries the column list forward, so the skipping survives the
+table's whole lifecycle. False positives only ever ADD files to the
+scan — results never change.
 
 Schema evolution: ``append_table(..., merge_schema=True)`` widens the
 table schema with the batch's new columns (additive only — a changed
@@ -391,6 +400,7 @@ def _file_may_match(fstats: dict | None, predicate) -> bool:
         cs = fstats.get("cols", {}).get(col)
         if cs is None or cs["t"] == "s":
             continue  # no safe bounds -> cannot exclude
+        lo, hi = cs["lo"], cs["hi"]
         if cs["t"] == "d":
             if isinstance(lit, str):
                 # strict ISO-8601 only: a malformed literal like
@@ -436,33 +446,21 @@ def _file_may_match(fstats: dict | None, predicate) -> bool:
             # exact in both mismatch directions.
             if "T" not in lit:
                 lit += "T00:00:00"
-            lo, hi = cs["lo"], cs["hi"]
             lo = lo if "T" in lo else lo + "T00:00:00"
             hi = hi if "T" in hi else hi + "T00:00:00"
-            if (
-                (op == "=" and not (lo <= lit <= hi))
-                or (op == "<" and lo >= lit)
-                or (op == "<=" and lo > lit)
-                or (op == ">" and hi <= lit)
-                or (op == ">=" and hi < lit)
-            ):
-                return False
-            continue
         elif cs["t"] == "n":
             if not isinstance(lit, (int, float)) or isinstance(lit, bool):
                 raise ValueError(
                     f"numeric column {col!r} needs a numeric literal, "
                     f"got {lit!r}"
                 )
-        lo, hi = cs["lo"], cs["hi"]
-        excluded = (
+        if (
             (op == "=" and not (lo <= lit <= hi))
             or (op == "<" and lo >= lit)
             or (op == "<=" and lo > lit)
             or (op == ">" and hi <= lit)
             or (op == ">=" and hi < lit)
-        )
-        if excluded:
+        ):
             return False
     return True
 
@@ -483,6 +481,42 @@ def prune_files(
     return kept, len(manifest["files"])
 
 
+def _commit(
+    path: str,
+    v: int,
+    manifest: dict,
+    op: str,
+    drop: set[str],
+    df: DataFrame | None = None,
+    schema: dict | None = None,
+    app_id: tuple[str, int] | None = None,
+) -> int:
+    """Publish version `v + 1`: `manifest` (version `v`) minus the files
+    in `drop`, plus `df` written as one new txn directory. The stats of
+    surviving files carry over and only the new files' footers are
+    read; schema, app ledger and Bloom columns carry forward unless
+    `schema` replaces the schema or `app_id` advances its ledger entry.
+    The one commit step of every mutation; returns the new version."""
+    files = _write_txn_files(df, path) if df is not None else []
+    bloom_cols = manifest.get("bloom_columns", [])
+    app_ids = dict(manifest.get("app_ids", {}))
+    if app_id is not None:
+        app_ids[app_id[0]] = app_id[1]
+    _publish(path, v + 1, {
+        "version": v + 1,
+        "op": op,
+        "files": [f for f in manifest["files"] if f not in drop] + files,
+        "schema": manifest["schema"] if schema is None else schema,
+        "app_ids": app_ids,
+        "bloom_columns": bloom_cols,
+        "stats": {
+            **{f: st for f, st in manifest.get("stats", {}).items() if f not in drop},
+            **_stats_for(path, files, bloom_cols),
+        },
+    })
+    return v + 1
+
+
 def create_table(
     df: DataFrame, path: str, bloom_columns: list[str] | None = None
 ) -> int:
@@ -501,21 +535,8 @@ def create_table(
         raise ValueError(f"bloom_columns not in schema: {missing}")
     os.makedirs(_commits_dir(path), exist_ok=True)
     os.makedirs(os.path.join(path, _DATA), exist_ok=True)
-    files = _write_txn_files(df, path)
-    _publish(
-        path,
-        0,
-        {
-            "version": 0,
-            "op": "create",
-            "files": files,
-            "schema": df.schema.jsonValue(),
-            "app_ids": {},
-            "bloom_columns": bloom_cols,
-            "stats": _stats_for(path, files, bloom_cols),
-        },
-    )
-    return 0
+    empty = {"files": [], "schema": df.schema.jsonValue(), "bloom_columns": bloom_cols}
+    return _commit(path, -1, empty, "create", set(), df)
 
 
 def read_snapshot(
@@ -596,22 +617,9 @@ def append_table(df: DataFrame, path: str, merge_schema: bool = False) -> int:
             for f in new_schema.fields
         ]
     )
-    files = _write_txn_files(aligned, path)
-    bloom_cols = manifest.get("bloom_columns", [])
-    new = {
-        "version": v + 1,
-        "op": "append",
-        "files": manifest["files"] + files,
-        "schema": new_schema.jsonValue(),
-        "app_ids": manifest.get("app_ids", {}),
-        "bloom_columns": bloom_cols,
-        "stats": {
-            **manifest.get("stats", {}),
-            **_stats_for(path, files, bloom_cols),
-        },
-    }
-    _publish(path, v + 1, new)
-    return v + 1
+    return _commit(
+        path, v, manifest, "append", set(), aligned, schema=new_schema.jsonValue()
+    )
 
 
 def _file_uri_to_rel(path: str, uri: str) -> str:
@@ -712,48 +720,10 @@ def merge_into(
     touched-file semi-join, and the anti-join and union of the write);
     callers with an expensive update pipeline should persist() it.
     Keys are not deduplicated: semi and anti joins ignore duplicates.
+    A merge is ``apply_changes`` with no delete keys, committed as op
+    "merge".
     """
-    v = latest_version(path)
-    manifest = _load_manifest(path, v)
-    app_ids = dict(manifest.get("app_ids", {}))
-    if app_id is not None and app_ids.get(app_id[0], -1) >= app_id[1]:
-        return {"version": v, "skipped": True, "files_rewritten": 0}
-
-    keys = updates.select(*key)
-    touched = _files_with_keys(spark, path, manifest, keys, key)
-    untouched = [f for f in manifest["files"] if f not in set(touched)]
-    if touched:
-        kept = _read_files(spark, path, manifest, touched).join(
-            keys, key, "left_anti"
-        )
-        to_write = kept.unionByName(updates)
-    else:
-        to_write = updates
-    files = _write_txn_files(to_write, path)
-    if app_id is not None:
-        app_ids[app_id[0]] = app_id[1]
-    new = {
-        "version": v + 1,
-        "op": "merge",
-        "files": untouched + files,
-        "schema": manifest["schema"],
-        "app_ids": app_ids,
-        "bloom_columns": manifest.get("bloom_columns", []),
-        "stats": {
-            **{
-                f: s for f, s in manifest.get("stats", {}).items()
-                if f not in set(touched)
-            },
-            **_stats_for(path, files, manifest.get("bloom_columns", [])),
-        },
-    }
-    _publish(path, v + 1, new)
-    return {
-        "version": v + 1,
-        "skipped": False,
-        "files_rewritten": len(touched),
-        "files_untouched": len(untouched),
-    }
+    return _apply_keyed(spark, path, updates, None, key, app_id, "merge")
 
 
 def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
@@ -777,25 +747,12 @@ def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
     partial = sorted(
         f for f, n in matched.items() if stats.get(f, {}).get("rows") != n
     )
-    files: list[str] = []
+    kept = None
     if partial:
         kept = _read_files(spark, path, manifest, partial).filter(
             f"NOT coalesce(({predicate}), false)"
         )
-        files = _write_txn_files(kept, path)
-    new = {
-        "version": v + 1,
-        "op": "delete",
-        "files": [f for f in manifest["files"] if f not in matched] + files,
-        "schema": manifest["schema"],
-        "app_ids": manifest.get("app_ids", {}),
-        "bloom_columns": manifest.get("bloom_columns", []),
-        "stats": {
-            **{f: s for f, s in stats.items() if f not in matched},
-            **_stats_for(path, files, manifest.get("bloom_columns", [])),
-        },
-    }
-    _publish(path, v + 1, new)
+    _commit(path, v, manifest, "delete", set(matched), kept)
     return sum(matched.values())
 
 
@@ -805,35 +762,16 @@ def compact_table(spark: SparkSession, path: str, target_files: int) -> int:
     v = latest_version(path)
     manifest = _load_manifest(path, v)
     df = read_snapshot(spark, path, v).repartition(target_files)
-    files = _write_txn_files(df, path)
-    _publish(
-        path,
-        v + 1,
-        {
-            "version": v + 1,
-            "op": "compact",
-            "files": files,
-            "schema": manifest["schema"],
-            "app_ids": manifest.get("app_ids", {}),
-            "bloom_columns": manifest.get("bloom_columns", []),
-            "stats": _stats_for(
-                path, files, manifest.get("bloom_columns", [])
-            ),
-        },
-    )
-    return v + 1
+    return _commit(path, v, manifest, "compact", set(manifest["files"]), df)
 
 
 def history(path: str) -> list[dict]:
     """Commit log: one {version, op, n_files} summary per version."""
-    return [
-        {
-            "version": v,
-            "op": _load_manifest(path, v)["op"],
-            "n_files": len(_load_manifest(path, v)["files"]),
-        }
-        for v in _list_versions(path)
-    ]
+    out = []
+    for v in _list_versions(path):
+        m = _load_manifest(path, v)
+        out.append({"version": v, "op": m["op"], "n_files": len(m["files"])})
+    return out
 
 
 def vacuum_table(path: str, keep_versions: int = 1) -> int:
@@ -881,7 +819,7 @@ def table_changes(
     v_hi = latest_version(path) if to_version is None else to_version
     if from_version > v_hi:
         raise ValueError(f"from_version {from_version} > to_version {v_hi}")
-    schema = StructType.fromJson(_load_manifest(path, v_hi)["schema"])
+    hi = _load_manifest(path, v_hi)
     prev = set(_load_manifest(path, from_version)["files"])
     parts = []
     for v in range(from_version + 1, v_hi + 1):
@@ -893,15 +831,13 @@ def table_changes(
             if not rel_files:
                 continue
             parts.append(
-                spark.read.schema(schema)
-                .parquet(*[os.path.join(path, f) for f in rel_files])
+                _read_files(spark, path, hi, rel_files)
                 .withColumn("_change_type", F.lit(op))
                 .withColumn("_commit_version", F.lit(v).cast("long"))
             )
         prev = cur
     if not parts:
-        out_schema = StructType.fromJson(_load_manifest(path, v_hi)["schema"])
-        empty = spark.createDataFrame([], out_schema)
+        empty = spark.createDataFrame([], StructType.fromJson(hi["schema"]))
         return empty.withColumn("_change_type", F.lit("insert")).withColumn(
             "_commit_version", F.lit(0).cast("long")
         ).limit(0)
@@ -926,63 +862,56 @@ def apply_changes(
     range/contents intersect the change set are rewritten). `app_id`
     rides the manifest for exactly-once replay, same contract as
     merge_into. Raises CommitConflict for the caller to retry."""
+    return _apply_keyed(
+        spark, path, upserts, delete_keys, key, app_id, "apply_changes"
+    )
+
+
+def _apply_keyed(
+    spark: SparkSession,
+    path: str,
+    upserts: DataFrame | None,
+    delete_keys: DataFrame | None,
+    key: list[str],
+    app_id: tuple[str, int] | None,
+    op: str,
+) -> dict:
+    """The keyed rewrite behind merge_into and apply_changes: the files
+    holding a key of `upserts` or `delete_keys` are rewritten without
+    those keys' rows, plus the upserts, as one commit named `op`."""
     v = latest_version(path)
     manifest = _load_manifest(path, v)
-    app_ids = dict(manifest.get("app_ids", {}))
-    if app_id is not None and app_ids.get(app_id[0], -1) >= app_id[1]:
-        return {"version": v, "skipped": True, "files_rewritten": 0}
-
-    parts = []
-    if upserts is not None:
-        parts.append(upserts.select(*key))
-    if delete_keys is not None:
-        parts.append(delete_keys.select(*key))
+    skipped = {"version": v, "skipped": True, "files_rewritten": 0}
+    ledger = manifest.get("app_ids", {})
+    if app_id is not None and ledger.get(app_id[0], -1) >= app_id[1]:
+        return skipped
+    parts = [df.select(*key) for df in (upserts, delete_keys) if df is not None]
     if not parts:
-        return {"version": v, "skipped": True, "files_rewritten": 0}
-    all_keys = parts[0]
-    for p in parts[1:]:
-        all_keys = all_keys.unionByName(p)
-    touched = _files_with_keys(spark, path, manifest, all_keys, key)
-    untouched = [f for f in manifest["files"] if f not in set(touched)]
+        return skipped
+    keys = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    touched = _files_with_keys(spark, path, manifest, keys, key)
     to_write = None
     if touched:
         to_write = _read_files(spark, path, manifest, touched).join(
-            all_keys, key, "left_anti"
+            keys, key, "left_anti"
         )
     if upserts is not None:
         to_write = (
             upserts if to_write is None else to_write.unionByName(upserts)
         )
-    if not touched and to_write is None and app_id is None:
+    if to_write is None and app_id is None:
         # no-op CDC batch (delete_keys matched nothing, no upserts):
         # don't commit a version whose file list is identical to the
         # previous one. With an app_id we DO fall through to a
         # metadata-only commit so the exactly-once ledger advances.
-        return {"version": v, "skipped": True, "files_rewritten": 0}
-    files = _write_txn_files(to_write, path) if to_write is not None else []
-    if app_id is not None:
-        app_ids[app_id[0]] = app_id[1]
-    new = {
-        "version": v + 1,
-        "op": "apply_changes",
-        "files": untouched + files,
-        "schema": manifest["schema"],
-        "app_ids": app_ids,
-        "bloom_columns": manifest.get("bloom_columns", []),
-        "stats": {
-            **{
-                f: s for f, s in manifest.get("stats", {}).items()
-                if f not in set(touched)
-            },
-            **_stats_for(path, files, manifest.get("bloom_columns", [])),
-        },
-    }
-    _publish(path, v + 1, new)
+        return skipped
     return {
-        "version": v + 1,
+        "version": _commit(
+            path, v, manifest, op, set(touched), to_write, app_id=app_id
+        ),
         "skipped": False,
         "files_rewritten": len(touched),
-        "files_untouched": len(untouched),
+        "files_untouched": len(manifest["files"]) - len(touched),
     }
 
 
@@ -1041,30 +970,10 @@ def compact_small_files(
     ]
     if len(small) < 2:
         return {"version": v, "skipped": True, "files_compacted": 0}
-    keep = [f for f in manifest["files"] if f not in set(small)]
-    df = spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(
-        *[os.path.join(path, f) for f in small]
-    ).coalesce(target_files)
-    files = _write_txn_files(df, path)
-    _publish(
-        path,
-        v + 1,
-        {
-            "version": v + 1,
-            "op": "compact_small",
-            "files": keep + files,
-            "schema": manifest["schema"],
-            "app_ids": manifest.get("app_ids", {}),
-            "bloom_columns": manifest.get("bloom_columns", []),
-            "stats": {
-                **{f: s for f, s in stats.items() if f in set(keep)},
-                **_stats_for(path, files, manifest.get("bloom_columns", [])),
-            },
-        },
-    )
+    df = _read_files(spark, path, manifest, small).coalesce(target_files)
     return {
-        "version": v + 1,
+        "version": _commit(path, v, manifest, "compact_small", set(small), df),
         "skipped": False,
         "files_compacted": len(small),
-        "files_kept": len(keep),
+        "files_kept": len(manifest["files"]) - len(small),
     }

@@ -220,6 +220,31 @@ def purchases_with_recent_views(
     ).select("purchase_id", F.col("p_user").alias("user_id"), "view_id")
 
 
+def _add_batch_totals(batch_df: DataFrame, existing: DataFrame | None) -> DataFrame:
+    """Per-user (n_events, total_value) of one micro-batch, added onto
+    the running totals in `existing` (None: there are none yet). Only
+    the batch's users come out — the sinks' upserts keep the rest."""
+    delta = batch_df.groupBy("user_id").agg(
+        F.count("*").alias("n_events"), F.sum("value").alias("total_value")
+    )
+    if existing is None:
+        return delta
+    return (
+        delta.alias("d")
+        .join(existing.alias("e"), "user_id", "left")
+        .select(
+            "user_id",
+            (
+                F.col("d.n_events") + F.coalesce(F.col("e.n_events"), F.lit(0))
+            ).alias("n_events"),
+            (
+                F.col("d.total_value")
+                + F.coalesce(F.col("e.total_value"), F.lit(0.0))
+            ).alias("total_value"),
+        )
+    )
+
+
 def upsert_totals_sink(path: str, ledger_key: str):
     """Build the foreachBatch sink for ``stream_upsert_user_totals``.
 
@@ -251,29 +276,11 @@ def upsert_totals_sink(path: str, ledger_key: str):
             return  # replayed micro-batch: already merged
 
         spark = batch_df.sparkSession
-        delta = batch_df.groupBy("user_id").agg(
-            F.count("*").alias("n_events"), F.sum("value").alias("total_value")
-        )
         if os.path.exists(path):
-            existing = spark.read.parquet(path)
-            merged = (
-                delta.alias("d")
-                .join(existing.alias("e"), "user_id", "left")
-                .select(
-                    "user_id",
-                    (
-                        F.col("d.n_events")
-                        + F.coalesce(F.col("e.n_events"), F.lit(0))
-                    ).alias("n_events"),
-                    (
-                        F.col("d.total_value")
-                        + F.coalesce(F.col("e.total_value"), F.lit(0.0))
-                    ).alias("total_value"),
-                )
-            )
-            upsert_parquet(spark, path, merged, ["user_id"])
+            totals = _add_batch_totals(batch_df, spark.read.parquet(path))
+            upsert_parquet(spark, path, totals, ["user_id"])
         else:
-            delta.write.mode("overwrite").parquet(path)
+            _add_batch_totals(batch_df, None).write.mode("overwrite").parquet(path)
 
         applied[ledger_key] = batch_id
         tmp = ledger + ".tmp"
@@ -325,24 +332,7 @@ def txn_upsert_totals_sink(table_path: str, ledger_key: str):
         from gpu_olap_engine_spark.sources import table_format as tf  # noqa: PLC0415
 
         spark = batch_df.sparkSession
-        delta = batch_df.groupBy("user_id").agg(
-            F.count("*").alias("n_events"), F.sum("value").alias("total_value")
-        )
-        existing = tf.read_snapshot(spark, table_path)
-        updates = (
-            delta.alias("d")
-            .join(existing.alias("e"), "user_id", "left")
-            .select(
-                "user_id",
-                (
-                    F.col("d.n_events") + F.coalesce(F.col("e.n_events"), F.lit(0))
-                ).alias("n_events"),
-                (
-                    F.col("d.total_value")
-                    + F.coalesce(F.col("e.total_value"), F.lit(0.0))
-                ).alias("total_value"),
-            )
-        )
+        updates = _add_batch_totals(batch_df, tf.read_snapshot(spark, table_path))
         tf.merge_into(
             spark, table_path, updates, ["user_id"], app_id=(ledger_key, batch_id)
         )

@@ -9,6 +9,7 @@ sort+limit fused to TakeOrdered, aggregates partial+final.
 from __future__ import annotations
 
 import gc
+import warnings
 
 import pyarrow.parquet as pq
 import pytest
@@ -78,6 +79,23 @@ def test_embedding_near_dup_is_blocked_not_all_pairs(spark):
         plan = plan_of(REGISTRY[name].fn(spark, SF_ORACLE), "simple")
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
+
+
+def test_gram_verify_builds_without_type_hint_warning(spark):
+    """The grouped-map verify closures of the near-dup and
+    decontamination entries carry no type hints: hints on one of their
+    two parameters make applyInPandas warn, at every build, that it
+    cannot infer the eval type."""
+    for name in ("sim_near_dup_pairs", "sim_decontaminate"):
+        gc.collect()
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            df = REGISTRY[name].fn(spark, SF_ORACLE)
+        del df
+        gc.collect()
+        assert not [
+            w for w in caught if "Cannot infer the eval type" in str(w.message)
+        ], name
 
 
 def test_ivf_probe_assignment_is_distributed(spark):
@@ -677,6 +695,27 @@ def test_persist_only_through_query_scope():
     )
     # an allow-list entry whose persist is gone must go too
     assert found == set(PERSIST_ALLOWED), set(PERSIST_ALLOWED) - found
+
+
+def test_table_format_publishes_only_through_commit():
+    """Every table_format mutation commits through ``_commit``, which
+    builds the one manifest; a function that calls ``_publish`` itself
+    is hand-building a manifest of its own."""
+    import ast
+    import pathlib
+
+    src = (
+        pathlib.Path(__file__).resolve().parent.parent
+        / "gpu_olap_engine_spark" / "sources" / "table_format.py"
+    )
+    callers = [
+        getattr(top, "name", "<module>")
+        for top in ast.parse(src.read_text()).body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", getattr(node.func, "attr", None)) == "_publish"
+    ]
+    assert callers == ["_commit"], callers
 
 
 # Plan construction cost (driver -> JVM gateway calls, ~0.3-0.5 ms

@@ -825,3 +825,48 @@ def test_bloom_columns_validated_and_typed(spark, tmp_path):
     # and the read stays correct
     res = tf.read_snapshot(spark, path, predicate=[("x", "=", 1.0)]).collect()
     assert [r["k"] for r in res] == [3]
+
+
+# Every mutation but the keyed ones commits through the same step as a
+# merge; each must carry the app-id ledger, the Bloom column list and
+# the stats of the files it keeps.
+_MUTATIONS = {
+    "append": lambda spark, path: tf.append_table(
+        spark.createDataFrame([(500, 5000)], "k long, v long"), path
+    ),
+    "delete": lambda spark, path: tf.delete_where(spark, path, "k < 10"),
+    "compact": lambda spark, path: tf.compact_table(spark, path, 2),
+    "compact_small": lambda spark, path: tf.compact_small_files(spark, path, 1000),
+    "apply_changes": lambda spark, path: tf.apply_changes(
+        spark, path,
+        spark.createDataFrame([(60, -6)], "k long, v long"),
+        spark.createDataFrame([(90,)], "k long"),
+        ["k"],
+    ),
+}
+
+
+@pytest.mark.parametrize("mutation", sorted(_MUTATIONS))
+def test_commit_metadata_survives_every_mutation(spark, tmp_path, mutation):
+    path = str(tmp_path / "t")
+    df = spark.range(100, numPartitions=4).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    tf.create_table(df, path, bloom_columns=["k"])
+    updates = spark.createDataFrame([(3, -1), (300, -3)], "k long, v long")
+    tf.merge_into(spark, path, updates, ["k"], app_id=("q", 0))
+    before = tf._load_manifest(path, 1)
+
+    _MUTATIONS[mutation](spark, path)
+    assert tf.latest_version(path) == 2
+    after = tf._load_manifest(path, 2)
+    assert after["app_ids"] == {"q": 0}
+    assert after["bloom_columns"] == ["k"]
+    for f in after["files"]:
+        if f in before["files"]:
+            assert after["stats"][f] == before["stats"][f]
+        else:
+            assert set(after["stats"][f]["bloom"]) == {"k"}
+    replay = tf.merge_into(spark, path, updates, ["k"], app_id=("q", 0))
+    assert replay == {"version": 2, "skipped": True, "files_rewritten": 0}
+    assert tf.latest_version(path) == 2
