@@ -445,6 +445,38 @@ def _mk_spark(cpus: str, extra: dict | None = None, pretouch: bool = False):
     return spark, warehouse
 
 
+def _warm(spark, group: str, n: int) -> None:
+    """Untimed warm-up of a fresh session: a tiny pass compiles the
+    codegen agg/join/shuffle paths once, then (unless `n` is 0) an
+    `n`-row pass through the group's own shuffle path."""
+    from pyspark.sql import functions as F  # noqa: PLC0415
+
+    spark.range(100_000).groupBy((F.col("id") % 2).alias("g")).agg(
+        F.count("*")
+    ).collect()
+    spark.range(100_000).select(F.col("id").alias("k")).join(
+        spark.range(100_000).select(F.col("id").alias("k")), "k"
+    ).agg(F.count("*")).collect()
+    if not n:
+        return
+    if group == "agg100":
+        # group-appropriate warm pass (r11): the groupby child only
+        # needs the aggregate/shuffle path hot — the 50M JOIN warm
+        # below costs 20-30 s on a loaded box for pools this group
+        # never touches, and that spend came straight out of the
+        # marquee groups' wall
+        df = spark.range(n, numPartitions=32).groupBy(
+            (F.col("id") % 100_000).alias("k")
+        ).agg(F.count("*").alias("c"), F.sum("id").alias("s"))
+    else:
+        wa = spark.range(n, numPartitions=32).select(F.col("id").alias("k"))
+        df = wa.join(
+            spark.range(n, numPartitions=32).select(F.col("id").alias("k")),
+            "k",
+        ).select(F.count("*").alias("c"))
+    df.write.format("noop").mode("overwrite").save()
+
+
 def _micro_frames(spark, group: str, ms: float):
     """(name, df) pairs for a group's micros, matching the reference's
     published shapes (BASELINE.md: 100M x 100M int-key inner join,
@@ -615,6 +647,23 @@ def _table_merge_run(spark, ms: float):
     return run
 
 
+# The DuckDB controls: the join100 and agg100 shapes at {n} rows, and
+# the join that warms DuckDB's allocator pools first (shared with
+# scripts/scale.py, which runs the same shapes at other row counts).
+DUCKDB_JOIN_SQL = (
+    "SELECT count(*) AS c FROM "
+    "(SELECT range AS k, range * 2 AS va FROM range({n})) a JOIN "
+    "(SELECT range AS k, range * 3 AS vb FROM range({n})) b USING (k)"
+)
+DUCKDB_GROUPBY_SQL = (
+    "SELECT count(*) AS c FROM (SELECT range % 100000 AS k, "
+    "count(*) AS cnt, sum(range) AS s FROM range({n}) GROUP BY k)"
+)
+DUCKDB_WARM_SQL = (
+    "SELECT count(*) FROM range({n}) a JOIN range({n}) b ON a.range = b.range"
+)
+
+
 def run_duckdb_child(runs_path: str, budget: float) -> None:
     """Child-process entry for the DuckDB comparison rows: the same
     generated join/group-by shapes, timed in-process with DuckDB on
@@ -632,26 +681,13 @@ def run_duckdb_child(runs_path: str, budget: float) -> None:
     # count(*) result: no ordering to preserve; drops a pipeline break
     con.execute("SET preserve_insertion_order=false")
     micros = [
-        (
-            "duckdb_join_100m",
-            f"SELECT count(*) AS c FROM "
-            f"(SELECT range AS k, range * 2 AS va FROM range({n})) a JOIN "
-            f"(SELECT range AS k, range * 3 AS vb FROM range({n})) b USING (k)",
-        ),
-        (
-            "duckdb_groupby_100m",
-            f"SELECT count(*) AS c FROM (SELECT range % 100000 AS k, "
-            f"count(*) AS cnt, sum(range) AS s FROM range({n}) GROUP BY k)",
-        ),
+        ("duckdb_join_100m", DUCKDB_JOIN_SQL.format(n=n)),
+        ("duckdb_groupby_100m", DUCKDB_GROUPBY_SQL.format(n=n)),
     ]
     # warmup: a 10M-row join (~1 s) faults DuckDB's allocator pools
     # before the timed reps — measured cold-rep spread without it was
     # 14-32 s against an 11 s converged floor
-    wn = max(n // 10, 1000)
-    con.sql(
-        f"SELECT count(*) FROM range({wn}) a JOIN range({wn}) b"
-        " ON a.range = b.range"
-    ).fetchall()
+    con.sql(DUCKDB_WARM_SQL.format(n=max(n // 10, 1000))).fetchall()
     with open(runs_path, "a") as out:
         runs: dict[str, list[float]] = {name: [] for name, _ in micros}
         for rep in range(MAX_REPS):
@@ -828,23 +864,14 @@ def run_micro_child(group: str, runs_path: str, budget: float) -> None:
         os.fsync(out.fileno())
         landed_names.add(name)  # watchdog zero-row deferral input
 
-    # tiny warmup: compiles the codegen agg/join/shuffle paths once
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    spark.range(100_000).groupBy((F.col("id") % 2).alias("g")).agg(
-        F.count("*")
-    ).collect()
-    spark.range(100_000).select(F.col("id").alias("k")).join(
-        spark.range(100_000).select(F.col("id").alias("k")), "k"
-    ).agg(F.count("*")).collect()
     # mid-size warm pass (round-6, targeting rep-1/min <= 1.2): even
     # with the heap pre-touched, the first 100M-row rep ran 1.4-1.9x
     # the warm floor (r5 artifact: 8.26 s vs 5.53) — shuffle spill
     # dirs, netty buffer pools, and the off-heap sort allocations are
     # first-touched lazily too. A 50M-row pass through the same
-    # shuffle-join path (~3 s, untimed) warms them at half scale
-    # (20M was measured insufficient: rep-1/min stayed 1.43).
-    warm = max(int(50_000_000 * float(os.environ.get("SPARK_GRAFT_MICRO_SCALE", "1.0"))), 100_000)
+    # shuffle path (~3 s, untimed) warms them at half scale (20M was
+    # measured insufficient: rep-1/min stayed 1.43).
+    warm = max(int(50_000_000 * ms), 100_000)
     # Setup-aware degrade (r14): when session start + pre-touch
     # already ate a big share of the budget (contended box), skip the
     # mid-size warm pass — its job is to make rep 1 land near the warm
@@ -860,31 +887,11 @@ def run_micro_child(group: str, runs_path: str, budget: float) -> None:
             file=sys.stderr,
         )
         warm = 0
-    if not warm:
-        pass
-    elif group == "agg100":
-        # group-appropriate warm pass (r11): the groupby child only
-        # needs the aggregate/shuffle path hot — the 50M JOIN warm
-        # below costs 20-30 s on a loaded box for pools this group
-        # never touches, and that spend came straight out of the
-        # marquee groups' wall
-        spark.range(warm, numPartitions=32).groupBy(
-            (F.col("id") % 100_000).alias("k")
-        ).agg(F.count("*").alias("c"), F.sum("id").alias("s")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-    else:
-        wa = spark.range(warm, numPartitions=32).select(F.col("id").alias("k"))
-        wa.join(
-            spark.range(warm, numPartitions=32).select(F.col("id").alias("k")),
-            "k",
-        ).select(F.count("*").alias("c")).write.format("noop").mode(
-            "overwrite"
-        ).save()
 
     try:
+        _warm(spark, group, warm)
         if group == "bucketed":
-            micros = _bucketed_micros(spark, ms, deadline, emit_run)
+            micros = _bucketed_micros(spark, ms, deadline)
         else:
             micros = _micro_frames(spark, group, ms)
         runs: dict[str, list[float]] = {name: [] for name, _ in micros}
@@ -944,17 +951,10 @@ def run_micro_child(group: str, runs_path: str, budget: float) -> None:
                 ):
                     continue
                 t0 = time.perf_counter()
-                try:
-                    if callable(df):
-                        df()  # imperative micro (table-format cycle)
-                    else:
-                        df.write.format("noop").mode("overwrite").save()
-                except Exception:
-                    if cancelled.is_set():
-                        # watchdog cancelled the in-flight job: stop
-                        # cleanly with everything already flushed
-                        break
-                    raise
+                if callable(df):
+                    df()  # imperative micro (table-format cycle)
+                else:
+                    df.write.format("noop").mode("overwrite").save()
                 t = time.perf_counter() - t0
                 r.append(t)
                 emit_run(name, t)
@@ -982,6 +982,12 @@ def run_micro_child(group: str, runs_path: str, budget: float) -> None:
                         f"{time.perf_counter() - g0:.1f}s",
                         file=sys.stderr,
                     )
+    except Exception:
+        # the watchdog cancelled an in-flight job (the warm pass, a
+        # bucketed write or a rep): stop cleanly, everything already
+        # flushed stays, and the parent lists missing rows as incomplete
+        if not cancelled.is_set():
+            raise
     finally:
         cancelled.set()  # retire the watchdog
         try:
@@ -995,14 +1001,17 @@ def run_micro_child(group: str, runs_path: str, budget: float) -> None:
         out.close()
 
 
-def _bucketed_micros(spark, ms: float, deadline: float, emit_run):
+def _bucketed_micros(spark, ms: float, deadline: float, buckets: int = 64):
     """Same 100M join through bucketed tables: both sides pre-bucketed
     on the key (the persistent analog of the reference's radix
     partitioning, done once at write time), so the join plan has NO
     exchange. The one-time bucketed writes are not part of the timing;
     their wall IS counted against the deadline (a squeezed budget
     abandons the group after the first write rather than stranding a
-    half-written pair)."""
+    half-written pair). Wider layouts than the bench's 64 buckets pack
+    `buckets // 64` whole buckets per write task, so every width
+    writes with 64 tasks (r11 sweep: at 4096 buckets 64 tasks beat 16
+    and 128)."""
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     from gpu_olap_engine_spark.sources import write_bucketed  # noqa: PLC0415
@@ -1016,9 +1025,10 @@ def _bucketed_micros(spark, ms: float, deadline: float, emit_run):
     b100 = spark.range(rows(100_000_000), numPartitions=64).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
     )
+    layout = dict(num_buckets=buckets, sort_cols=["k"], one_file_per_bucket=True,
+                  files_per_task=max(1, buckets // 64))
     t0 = time.perf_counter()
-    write_bucketed(a100, "bench_ba", ["k"], num_buckets=64,
-                   sort_cols=["k"], one_file_per_bucket=True)
+    write_bucketed(a100, "bench_ba", ["k"], **layout)
     first_write = time.perf_counter() - t0
     # r14 (measured failure, this round's run 4): this used to RAISE
     # when the second write projected past the soft deadline — rc 1,
@@ -1037,8 +1047,7 @@ def _bucketed_micros(spark, ms: float, deadline: float, emit_run):
             file=sys.stderr,
         )
         return []
-    write_bucketed(b100, "bench_bb", ["k"], num_buckets=64,
-                   sort_cols=["k"], one_file_per_bucket=True)
+    write_bucketed(b100, "bench_bb", ["k"], **layout)
     # The legacy outputOrdering conf above is only sound when every
     # bucket is a single sorted file (ADVICE r9): verify the layout
     # actually landed that way before any join reads the tables — a
@@ -1053,9 +1062,9 @@ def _bucketed_micros(spark, ms: float, deadline: float, emit_run):
         nfiles = len(
             [f for f in os.listdir(loc) if f.endswith(".parquet")]
         )
-        if nfiles != 64:
+        if nfiles != buckets:
             raise RuntimeError(
-                f"{t}: {nfiles} parquet files for 64 buckets — "
+                f"{t}: {nfiles} parquet files for {buckets} buckets — "
                 "one-file-per-bucket layout violated; refusing to "
                 "run the sort-free merge micro on it"
             )

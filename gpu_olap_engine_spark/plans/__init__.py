@@ -36,14 +36,6 @@ def scan_pushdown_report(df: DataFrame) -> dict[str, list[str]]:
     return report
 
 
-def assert_no_cartesian(df: DataFrame) -> None:
-    """Raise if the plan contains a cartesian/unconditioned nested-loop
-    product — the join shape that cannot survive a 100x scale-up."""
-    plan = plan_string(df, "simple")
-    if "CartesianProduct" in plan:
-        raise AssertionError("plan contains CartesianProduct:\n" + plan)
-
-
 def scan_metrics(df: DataFrame) -> list[dict[str, int]]:
     """Measured (not inferred) scan-node metrics: runs the query, then
     reads numOutputRows / numFiles off each leaf scan of the executed

@@ -496,9 +496,23 @@ def _commit(
     surviving files carry over and only the new files' footers are
     read; schema, app ledger and Bloom columns carry forward unless
     `schema` replaces the schema or `app_id` advances its ledger entry.
-    The one commit step of every mutation; returns the new version."""
+    The one commit step of every mutation; returns the new version.
+
+    A new file whose footer counts 0 rows (an empty batch writes one)
+    is deleted, not published. A commit that then adds and drops no
+    file and changes neither schema nor ledger publishes nothing and
+    returns `v`."""
     files = _write_txn_files(df, path) if df is not None else []
     bloom_cols = manifest.get("bloom_columns", [])
+    new_stats = _stats_for(path, files, bloom_cols)
+    for f in [f for f in files if new_stats[f]["rows"] == 0]:
+        os.unlink(os.path.join(path, f))
+        del new_stats[f]
+    if files and not new_stats:  # every new file was empty
+        shutil.rmtree(os.path.join(path, os.path.dirname(files[0])))
+    files = [f for f in files if f in new_stats]
+    if v >= 0 and not files and not drop and schema is None and app_id is None:
+        return v
     app_ids = dict(manifest.get("app_ids", {}))
     if app_id is not None:
         app_ids[app_id[0]] = app_id[1]
@@ -511,7 +525,7 @@ def _commit(
         "bloom_columns": bloom_cols,
         "stats": {
             **{f: st for f, st in manifest.get("stats", {}).items() if f not in drop},
-            **_stats_for(path, files, bloom_cols),
+            **new_stats,
         },
     })
     return v + 1
@@ -743,6 +757,8 @@ def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
         spark, path, manifest, manifest["files"],
         lambda df: df.filter(predicate),
     )
+    if not matched:
+        return 0
     stats = manifest.get("stats", {})
     partial = sorted(
         f for f, n in matched.items() if stats.get(f, {}).get("rows") != n
@@ -899,16 +915,14 @@ def _apply_keyed(
         to_write = (
             upserts if to_write is None else to_write.unionByName(upserts)
         )
-    if to_write is None and app_id is None:
-        # no-op CDC batch (delete_keys matched nothing, no upserts):
-        # don't commit a version whose file list is identical to the
-        # previous one. With an app_id we DO fall through to a
-        # metadata-only commit so the exactly-once ledger advances.
+    # a batch that changes no row (no upserts, or an empty upsert
+    # batch, and no matched key) commits nothing; with an app_id the
+    # commit is metadata-only, so the exactly-once ledger advances
+    new_v = _commit(path, v, manifest, op, set(touched), to_write, app_id=app_id)
+    if new_v == v:
         return skipped
     return {
-        "version": _commit(
-            path, v, manifest, op, set(touched), to_write, app_id=app_id
-        ),
+        "version": new_v,
         "skipped": False,
         "files_rewritten": len(touched),
         "files_untouched": len(manifest["files"]) - len(touched),

@@ -18,8 +18,9 @@ A TARGET is one of:
   Then, untimed, both arms' collected results must have the same
   order-insensitive digest, and each arm's formatted plan is written to
   ``.ab/<arm>/<name>.txt``. Then come ``--pairs`` pairs, alternating
-  which arm runs first; a rep is ``clearCache()`` and a ``noop``-sink
-  write of ``registry[name].fn(spark, sf_dir)``.
+  which arm runs first; a rep (``timed_rep``) is ``gc.collect()``,
+  ``clearCache()`` and a ``noop``-sink write of
+  ``registry[name].fn(spark, sf_dir)``.
 - ``perfbench:<workload>``. The arms alternate runs of their own
   ``perfbench/run.py`` with seeds 1..N and BENCHMARK.json's
   ``run_seconds``.
@@ -105,6 +106,26 @@ def _summary(xs: list[float]) -> dict:
 
 def _r(x: float) -> float:
     return round(x, 4)
+
+
+# -- the timing rep -----------------------------------------------------
+
+
+def timed_rep(spark, run) -> float:
+    """Seconds of one timed rep, the rep of every timing here and in
+    scripts/scale.py. Untimed: ``gc.collect()`` releases the previous
+    result's query-scoped persists and ``clearCache()`` drops anything
+    left cached, so each rep pays its own builds. Timed: ``run()``,
+    which builds the plan (a registry entry's construction is part of
+    its cost) and returns a DataFrame, written to the ``noop`` sink; or
+    runs its own action and returns None."""
+    gc.collect()
+    spark.catalog.clearCache()
+    t0 = time.perf_counter()
+    df = run()
+    if df is not None:
+        df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
 
 
 # -- identity and plans -------------------------------------------------
@@ -226,17 +247,12 @@ def _worker(checkout: str, sf_dir: str, scratch: str, conn) -> None:
     def run(name: str):
         return registry[name].fn(spark, sf_dir)
 
-    def timed(name: str) -> float:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        run(name).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
     def ident(name: str) -> dict:
         rows = run(name).collect()
         return {"digest": digest(rows), "rows": len(rows)}
 
-    ops = {"time": timed, "plan": lambda name: plan_string(run(name)), "identity": ident}
+    ops = {"time": lambda name: timed_rep(spark, lambda: run(name)),
+           "plan": lambda name: plan_string(run(name)), "identity": ident}
     conn.send(("ok", None))
     while True:
         op, name = conn.recv()

@@ -5,7 +5,7 @@ tests/test_oracle.py pins the harness at sf0.01 (the driver's gate);
 this script runs the SAME exact comparison (row count + column names +
 bit-exact values, order-insensitive) at any fixture dir — the round
 evidence that every registry entry stays green at sf0.1 and at the
-~sf1 replica (scripts/bench_scale.py --keep generates it), not just
+~sf1 replica (`scripts/scale.py build sf1` generates it), not just
 at the sampled scale.
 
 Usage: python3 scripts/oracle_sweep.py [sf_dir] [-k substring]

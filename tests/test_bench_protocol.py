@@ -227,3 +227,56 @@ def test_cache_clear_failure_is_noted_and_other_steps_run():
     notes: list[str] = []
     bench._clear_engine_caches(Spark(), notes)
     assert notes == ["cache clear catalog.clearCache: RuntimeError"]
+
+
+def test_watchdog_cancel_during_warm_pass_exits_cleanly(spark, tmp_path, monkeypatch):
+    """A watchdog cancel that lands in the untimed warm pass stops the
+    micro child cleanly (it returns, so the process exits 0) with an
+    empty runs file; the parent then lists the group's rows as
+    incomplete. The stub session's every action blocks until
+    cancelAllJobs() and then raises, as a cancelled Spark job does."""
+    import threading
+
+    class Blocked:
+        """A DataFrame (or writer) whose actions wait for the cancel."""
+
+        def __init__(self, cancel: threading.Event):
+            self.cancel = cancel
+
+        def __getattr__(self, name):
+            return self
+
+        def __call__(self, *args, **kwargs):
+            return self
+
+        def collect(self):
+            self.cancel.wait(60)
+            raise RuntimeError("job cancelled")
+
+        save = collect
+
+    class StubSpark:
+        def __init__(self):
+            self.cancel = threading.Event()
+            self.sparkContext = self
+
+        def cancelAllJobs(self):
+            self.cancel.set()
+
+        def range(self, *args, **kwargs):
+            return Blocked(self.cancel)
+
+        def stop(self):
+            pass
+
+    stub = StubSpark()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEMORY", "1g")
+    monkeypatch.setattr(
+        bench, "_mk_spark", lambda *a, **k: (stub, str(tmp_path / "wh"))
+    )
+    runs = tmp_path / "runs.jsonl"
+    # a budget already 100 s spent puts the watchdog past its
+    # zero-row horizon at once
+    bench.run_micro_child("light", str(runs), -100.0)
+    assert stub.cancel.is_set()
+    assert runs.read_text() == ""

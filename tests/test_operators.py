@@ -568,12 +568,16 @@ def test_delete_where_rewrites_dataset(spark, tmp_path):
 def test_ancestor_closure_rejects_cycle(spark):
     """A 2-cycle has one parent per node, so it passes the forest
     check; its jumps never run dry, and running out of rounds must
-    raise instead of returning duplicated pairs."""
+    raise instead of returning duplicated pairs. A node with two
+    parents fails the forest check itself."""
     from gpu_olap_engine_spark.operators.graph import ancestor_closure
 
     edges = spark.createDataFrame([(1, 2), (2, 1)], "node long, parent long")
     with pytest.raises(ValueError, match="did not converge"):
         ancestor_closure(edges, max_rounds=4).collect()
+    dag = spark.createDataFrame([(1, 2), (1, 3), (2, 4)], "node long, parent long")
+    with pytest.raises(ValueError, match="more than one distinct parent"):
+        ancestor_closure(dag, max_rounds=4).collect()
 
 
 def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):

@@ -340,13 +340,15 @@ def test_quality_budget_single_shuffle(spark):
 
 
 def test_bench_suites_reference_registered_queries():
-    """Every name in bench.py's HEADLINE set and bench_scale's SUITE
-    must exist in the registry — a rename that breaks the driver's
-    bench run should fail here first, not in the round artifact."""
+    """Every name in bench.py's HEADLINE set and the scale harness's
+    suites must exist in the registry — a rename that breaks the
+    driver's bench run should fail here first, not in the round
+    artifact."""
     import bench
-    from scripts.bench_scale import SUITE
+    from scripts.scale import COUNT_ROWS, SUITES
 
-    missing = [n for n in bench.HEADLINE + SUITE if n not in REGISTRY]
+    names = bench.HEADLINE + SUITES["sf1"] + SUITES["sf10"] + sorted(COUNT_ROWS)
+    missing = [n for n in names if n not in REGISTRY]
     assert not missing, missing
 
 

@@ -726,6 +726,31 @@ def test_apply_changes_noop_batch_skips_commit(spark, tmp_path):
     assert _rows(spark, path) == {(i, i * 10) for i in range(20)}
 
 
+def test_empty_merge_writes_no_file(spark, tmp_path):
+    """An empty upsert batch adds no 0-row file: without an app_id it
+    commits nothing, with one it commits the ledger alone, so empty
+    streaming micro-batches do not accrete files."""
+    path = _mk(spark, tmp_path, n=20, parts=2)
+    files0 = tf._load_manifest(path, 0)["files"]
+    txns0 = _txn_dirs(path)
+    empty = spark.createDataFrame([], "k long, v long")
+    r = tf.merge_into(spark, path, empty, ["k"])
+    assert r["skipped"] is True and tf.latest_version(path) == 0
+    r2 = tf.merge_into(spark, path, empty, ["k"], app_id=("s", 1))
+    assert r2["skipped"] is False and r2["files_rewritten"] == 0
+    m = tf._load_manifest(path, 1)
+    assert m["files"] == files0 and m["app_ids"] == {"s": 1}
+    assert _txn_dirs(path) == txns0
+    assert _rows(spark, path) == {(i, i * 10) for i in range(20)}
+
+
+def test_delete_where_matching_nothing_commits_nothing(spark, tmp_path):
+    path = _mk(spark, tmp_path, n=20, parts=2)
+    assert tf.delete_where(spark, path, "k > 100") == 0
+    assert tf.latest_version(path) == 0
+    assert [h["op"] for h in tf.history(path)] == ["create"]
+
+
 def _mk_interleaved(spark, tmp_path, n=4000, parts=8):
     """Every file spans the whole key range (round-robin repartition),
     so min/max range stats can never exclude a file for an in-range
