@@ -4,9 +4,9 @@
 The reference is batch-only (its "streaming" is out-of-core paging);
 this walks the real stream pipelines the engine adds — file-source
 stand-in for Kafka, event-time windows with watermarks, session
-windows, stateful running totals, and the foreachBatch incremental
-upsert sink. Each pipeline's batch twin is oracle-checked (q32/q33);
-tests assert stream==batch parity.
+windows, and the exactly-once foreachBatch sink that maintains
+per-user totals in a snapshot table. Each pipeline's batch twin is
+oracle-checked (q32/q33); tests assert stream==batch parity.
 
 Run: python3 examples/streaming_usage.py [fixture_dir]
 (default fixture_dir: /root/testdata/sf0.001)
@@ -21,24 +21,15 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def run_to_memory(df, name: str, mode: str):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-
 def main(data_dir: str = "/root/testdata/sf0.001") -> None:
     from gpu_olap_engine_spark.config import EngineConfig
     from gpu_olap_engine_spark.session import get_spark
+    from gpu_olap_engine_spark.sources import table_format as tf
     from gpu_olap_engine_spark.streaming import (
         read_events_stream,
+        run_to_memory,
         session_counts,
-        stream_upsert_user_totals,
+        stream_upsert_user_totals_txn,
         windowed_counts,
     )
 
@@ -46,30 +37,28 @@ def main(data_dir: str = "/root/testdata/sf0.001") -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # 1. event-time tumbling windows with a 30-minute watermark
-    stream = read_events_stream(spark, data_dir)
-    run_to_memory(windowed_counts(stream), "wc", "complete")
+    events = read_events_stream(spark, data_dir)
+    wc = run_to_memory(windowed_counts(events), "complete")
     print("1. tumbling 10-min windows (top 5 by count):")
-    spark.sql(
-        "SELECT * FROM wc ORDER BY cnt DESC, bucket_start, event_type LIMIT 5"
-    ).show()
+    wc.orderBy(wc.cnt.desc(), "bucket_start", "event_type").show(5)
 
     # 2. session windows per user (30-min gap)
-    run_to_memory(session_counts(read_events_stream(spark, data_dir)), "sess", "complete")
+    events = read_events_stream(spark, data_dir)
+    sess = run_to_memory(session_counts(events), "complete")
     print("2. session windows (5 busiest):")
-    spark.sql("SELECT * FROM sess ORDER BY n_events DESC, user_id LIMIT 5").show()
+    sess.orderBy(sess.n_events.desc(), "user_id").show(5)
 
-    # 3. foreachBatch incremental sink: continuously-maintained
-    #    per-user totals merged into a parquet store
+    # 3. exactly-once foreachBatch sink: per-user totals merged into a
+    #    snapshot table, each batch id committed with its data
     with tempfile.TemporaryDirectory() as tmp:
-        store, ckpt = f"{tmp}/totals", f"{tmp}/ckpt"
-        q = stream_upsert_user_totals(
-            read_events_stream(spark, data_dir), store, ckpt
+        table, ckpt = f"{tmp}/totals", f"{tmp}/ckpt"
+        q = stream_upsert_user_totals_txn(
+            read_events_stream(spark, data_dir), table, ckpt
         )
         q.awaitTermination(120)
-        print("3. upsert-maintained user totals (top 5):")
-        spark.read.parquet(store).orderBy(
-            "total_value", ascending=False
-        ).show(5)
+        print("3. snapshot-table user totals (top 5):")
+        totals = tf.read_snapshot(spark, table)
+        totals.orderBy(totals.total_value.desc(), "user_id").show(5)
 
     spark.stop()
 

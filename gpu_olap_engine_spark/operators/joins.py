@@ -100,8 +100,8 @@ def merge_by_key(
     table format's MERGE pays for its find-touched-files phase, minus
     the transaction log. At 100 TB: run it partition-wise against a
     bucketed target (zero-exchange on the target side) and write
-    through sources.upsert_parquet / a real table format; this
-    transform is the semantics layer those sinks share. The reference
+    through a table format (sources.table_format.merge_into); this
+    transform is the semantics layer its MERGE shares. The reference
     has no writes at all (parser.rs rejects non-SELECT).
     """
     from pyspark.sql import functions as F  # noqa: PLC0415

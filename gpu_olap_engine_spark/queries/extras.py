@@ -259,7 +259,7 @@ def q90(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched keys take the source row ('updated'), source-only keys
     insert, the rest persist ('kept'). The oracle states the same
     semantics as src-wins union + anti. This is the semantics layer
-    under sources.upsert_parquet and a table format's MERGE; the
+    under a table format's MERGE (sources.table_format.merge_into); the
     reference has no write path at all (parser.rs rejects
     non-SELECT)."""
     from gpu_olap_engine_spark.operators.joins import merge_by_key  # noqa: PLC0415

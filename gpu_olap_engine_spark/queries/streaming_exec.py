@@ -4,7 +4,8 @@ Every other streaming artifact in this repo is either a batch twin
 (q32/q33/q56/q139) or a pytest-gated pipeline (tests/test_streaming).
 These entries close the remaining gap: the registered callable runs a
 real `writeStream` (file source -> availableNow trigger -> memory
-sink), waits for termination, and returns the sink table — so the
+sink, through streaming.pipelines.run_to_memory), waits for
+termination, and returns the sink's rows — so the
 DRIVER's DuckDB gate checks the output of the actual streaming
 engine, not a batch re-expression. With a finite input and an
 availableNow trigger the streaming semantics (watermark, state store,
@@ -20,12 +21,18 @@ produce float drift vs the oracle.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gpu_olap_engine_spark.queries import register
+from gpu_olap_engine_spark.streaming.pipelines import (
+    purchases_with_recent_views,
+    read_events_stream,
+    run_to_memory,
+    running_user_totals,
+    session_counts,
+    windowed_counts,
+)
 
 _US = "epoch_us(CAST(ts AS TIMESTAMP))"
 
@@ -56,40 +63,8 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     introduce float error. At scale this exact pipeline runs
     continuously with the same watermark bounding state; the memory
     sink swaps for the txn upsert sink (streaming/pipelines.py)."""
-    from gpu_olap_engine_spark.streaming.pipelines import read_events_stream
-
     events = read_events_stream(spark, sf_dir)
-    agg = (
-        events.withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("cnt"),
-            # stays int64 (not decimal like the batch rollups): the
-            # group is ONE 10-minute window of one type, so the sum is
-            # bounded by arrival rate, not corpus size -- ~1e7/row
-            # quantized needs ~1e12 rows in a single window to wrap --
-            # and the emitted column is integer-schema'd state.
-            F.sum(F.floor(F.col("value") * 10000).cast("long")).alias(
-                "sum_value_e4"
-            ),
-        )
-        .select(
-            F.col("w.start").cast("long").alias("bucket_start"),
-            "event_type",
-            "cnt",
-            "sum_value_e4",
-        )
-    )
-    name = f"swc_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(windowed_counts(events), "complete")
 
 
 @register(
@@ -139,32 +114,8 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     end = last event + gap). Ties on (user_id, ts) cannot occur in
     the fixture (event ts is unique per user); the ORDER BY carries
     event_id anyway for the LAG to be deterministic."""
-    from gpu_olap_engine_spark.streaming.pipelines import read_events_stream
-
     events = read_events_stream(spark, sf_dir)
-    agg = (
-        events.withWatermark("ts", "30 minutes")
-        .groupBy(
-            F.session_window("ts", "30 minutes").alias("sw"), "user_id"
-        )
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("sw.start").cast("long").alias("session_start"),
-            F.col("sw.end").cast("long").alias("session_end"),
-            "n_events",
-        )
-    )
-    name = f"ssw_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(session_counts(events), "complete")
 
 
 @register(
@@ -195,25 +146,9 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle spells out; the gate compares the exact matched-pair id
     set (all-integer, bit-stable). At scale this exact topology runs
     continuously with view-side state bounded by watermark+horizon."""
-    from gpu_olap_engine_spark.streaming.pipelines import (
-        purchases_with_recent_views,
-        read_events_stream,
-    )
-
     events = read_events_stream(spark, sf_dir)
-    joined = purchases_with_recent_views(events).select(
-        "purchase_id", "view_id"
-    )
-    name = f"ssj_{uuid.uuid4().hex[:12]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    joined = purchases_with_recent_views(events).select("purchase_id", "view_id")
+    return run_to_memory(joined, "append")
 
 
 @register(
@@ -236,26 +171,15 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the ingestion-dedup front of the corpus pipeline
     (streaming.ingest_corpus_stream) with state bounded by the
     watermark horizon instead of growing with history."""
-    from gpu_olap_engine_spark.streaming.pipelines import read_events_stream
-
-    events = read_events_stream(spark, sf_dir)
     deduped = (
-        events.select("user_id", "event_type", "ts")
+        read_events_stream(spark, sf_dir)
+        .select("user_id", "event_type", "ts")
         .withWatermark("ts", "30 minutes")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"sdk_{uuid.uuid4().hex[:12]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(deduped, "append")
         .groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n_users"))
     )
@@ -278,7 +202,7 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     running_user_totals — the analog of the reference's custom-kernel
     registration, README.md:354-378), run as a real writeStream in
     update mode with an availableNow trigger and a memory sink. The
-    quantized variant accumulates exact int64 e4 units inside the
+    operator accumulates exact int64 e4 units inside the
     state store, so micro-batch boundaries and state-merge order
     cannot move the result off the batch answer. The sink holds one
     row per user per update; n_events strictly increases per
@@ -286,24 +210,9 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_by(total, n_events) recovers each user's FINAL state row
     deterministically whether the trigger produced one micro-batch or
     many (the ~sf1 replica streams multiple files)."""
-    from gpu_olap_engine_spark.streaming.pipelines import (
-        read_events_stream,
-        running_user_totals,
-    )
-
-    events = read_events_stream(spark, sf_dir)
-    totals = running_user_totals(events, quantized=True)
-    name = f"sut_{uuid.uuid4().hex[:12]}"
-    q = (
-        totals.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    totals = running_user_totals(read_events_stream(spark, sf_dir))
     return (
-        spark.table(name)
+        run_to_memory(totals, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),

@@ -206,20 +206,21 @@ def q76_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor (gibberish detector), punctuation ceiling (markup/code
     detector), and duplicate-3-gram ceiling (repetition detector) —
     the standard rule stack a curation pipeline applies before any
-    model-based scoring. One scan + the shingle pass; every rule is a
-    per-document expression, so the gate is reshard-stable and
-    embarrassingly parallel at 100 TB. The shingle relation has one
-    consumer (the per-document count), so it is not persisted."""
+    model-based scoring. One scan; every rule is a per-document
+    expression, so the gate is reshard-stable and embarrassingly
+    parallel at 100 TB. The distinct-3-gram count is the size of the
+    row's own deduped shingle array: no shuffle or join, and a
+    duplicated doc_id keeps each row's own count."""
     from gpu_olap_engine_spark.operators import dedup as D
 
-    docs = T(spark, sf_dir, "documents")
-    feats = X.quality_features(spread(docs), "doc_id", "text")
-    d3 = (
-        D.shingles(docs, "doc_id", "text", 3)
-        .groupBy("id")
-        .agg(F.count("*").alias("n_distinct"))
+    docs = (
+        spread(T(spark, sf_dir, "documents"))
+        .selectExpr("doc_id", "text", f"{D._tokenize_sql('text')} AS w")
+        .selectExpr(
+            "doc_id", "text", f"size({D._shingle_sql('w', 3)}) AS n_distinct"
+        )
     )
-    joined = feats.join(d3, feats.doc_id == d3.id).drop("id")
+    feats = X.quality_features(docs, "doc_id", "text", keep=("n_distinct",))
     dup_ratio = F.col("n_distinct").cast("double") / F.greatest(
         F.col("n_tokens") - 2, F.lit(1)
     )
@@ -227,7 +228,7 @@ def q76_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     r_stop = F.col("stopword_ratio") >= 0.02
     r_punct = F.col("punct_ratio") <= 0.2
     r_dup = dup_ratio >= 0.5
-    return joined.select(
+    return feats.select(
         "doc_id",
         "n_tokens",
         "stopword_ratio",

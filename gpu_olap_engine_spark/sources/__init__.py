@@ -5,7 +5,9 @@ rejects non-SELECT, gpu-olap-core/src/parser.rs:18-21; results go to
 driver RAM as Arrow). This module rounds out the I/O surface:
 parquet/csv/json/orc readers, and writers with the partitioning knobs
 that matter at 100 TB (partitionBy for pruning, maxRecordsPerFile
-against giant files, bucketing for shuffle-free joins).
+against giant files, bucketing for shuffle-free joins). Mutations
+(MERGE, DELETE, compaction) go through the snapshot table format in
+``sources.table_format``.
 """
 
 from __future__ import annotations
@@ -57,73 +59,6 @@ def write_table(
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     writer.options(**options).save(path)
-
-
-def _swap_in(path: str, staging: str) -> None:
-    """Replace dataset dir `path` with `staging` crash-safely: rename
-    the old dir aside, move staging into place, then delete the old
-    copy. A crash mid-swap leaves either the old or the new dataset
-    intact on disk (at worst under a leftover ``__old``/``__staging``
-    name), never neither. Note the swap is not atomic for concurrent
-    READERS: between the two renames `path` briefly does not exist —
-    plain parquet directories have no snapshot isolation (that is the
-    table-format gap recorded in ROADMAP.md)."""
-    import os
-    import shutil
-
-    if not os.path.isdir(path):
-        raise ValueError(f"not a dataset directory: {path!r}")
-    old = path.rstrip("/") + "__old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-
-
-def upsert_parquet(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key: list[str],
-) -> None:
-    """Upsert (merge-by-key) into a parquet dataset without a table
-    format: existing rows whose key appears in `updates` are replaced,
-    new keys appended. Implemented as anti-join + union into a staging
-    directory, then an atomic-ish swap — plain parquet cannot rewrite
-    in place (the read is lazy over the same files being overwritten).
-    At 100 TB prefer a real table format (Delta/Iceberg MERGE); this
-    is the dependency-free fallback with the same semantics.
-    """
-    existing = spark.read.parquet(path)
-    kept = existing.join(updates.select(*key).distinct(), key, "left_anti")
-    merged = kept.unionByName(updates)
-    staging = path.rstrip("/") + "__staging"
-    merged.write.mode("overwrite").parquet(staging)
-    _swap_in(path, staging)
-
-
-def compact(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-) -> int:
-    """Compact a small-file parquet dataset to `target_files` files.
-
-    Streaming sinks and incremental ingest accrete tiny files; scan
-    cost at 100 TB is dominated by file-open overhead once files drop
-    below ~100 MB. Rewrites through a staging dir + swap (same
-    in-place constraint as upsert_parquet). Returns the new file count.
-    """
-    import os
-
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + "__staging"
-    df.repartition(target_files).write.mode("overwrite").parquet(staging)
-    _swap_in(path, staging)
-    return sum(
-        1 for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith(".")
-    )
 
 
 def write_clustered(
@@ -297,29 +232,3 @@ def write_zordered(
         .drop("__z")
     )
     out.write.mode("overwrite").options(**options).parquet(path)
-
-
-def delete_where(
-    spark: SparkSession,
-    path: str,
-    predicate: str,
-) -> int:
-    """Delete rows matching a SQL predicate from a parquet dataset
-    (the right-to-erasure / retention-expiry rewrite). Returns the
-    number of rows deleted.
-
-    Plain parquet cannot delete in place, so this is the keep-side
-    rewrite through a staging dir + crash-safe swap (same machinery as
-    upsert_parquet/compact). At 100 TB a table format turns this into
-    a find-touched-files rewrite + tombstone commit; partition the
-    dataset on the usual deletion key (e.g. user id bucket, date) so
-    the rewrite touches O(selectivity) files, not all of them.
-    """
-    df = spark.read.parquet(path)
-    total = df.count()
-    # rows where the predicate is NULL are kept, as SQL DELETE keeps them
-    kept = df.filter(f"NOT coalesce(({predicate}), false)")
-    staging = path.rstrip("/") + "__staging"
-    kept.write.mode("overwrite").parquet(staging)
-    _swap_in(path, staging)
-    return total - spark.read.parquet(path).count()

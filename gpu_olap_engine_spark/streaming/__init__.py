@@ -13,25 +13,23 @@ from gpu_olap_engine_spark.streaming.pipelines import (
     enrich_with_dimension,
     purchases_with_recent_views,
     read_events_stream,
+    run_to_memory,
     running_user_totals,
     session_counts,
-    stream_upsert_user_totals,
     stream_upsert_user_totals_txn,
     txn_upsert_totals_sink,
-    upsert_totals_sink,
     windowed_counts,
 )
 
 __all__ = [
     "read_events_stream",
+    "run_to_memory",
     "windowed_counts",
     "session_counts",
     "dedup_stream",
     "running_user_totals",
     "enrich_with_dimension",
     "purchases_with_recent_views",
-    "stream_upsert_user_totals",
     "stream_upsert_user_totals_txn",
     "txn_upsert_totals_sink",
-    "upsert_totals_sink",
 ]

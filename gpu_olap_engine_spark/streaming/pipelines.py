@@ -4,10 +4,15 @@ All pipelines are source-agnostic (they take any streaming DataFrame
 with the events schema); ``read_events_stream`` provides the
 file-source handle used by tests (parquet file stream, the local
 stand-in for Kafka — at scale swap ``readStream.format("kafka")``,
-everything downstream is unchanged).
+everything downstream is unchanged). ``run_to_memory`` is the one
+memory-sink runner: the registry's streaming entries, the tests and
+the examples all run a pipeline to completion through it.
 """
 
 from __future__ import annotations
+
+import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -15,31 +20,52 @@ from pyspark.sql import functions as F
 from gpu_olap_engine_spark.queries.tables import SCHEMAS
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the events fixture with ts as a
-    microsecond TimestampType (LTZ — watermarks reject NTZ).
-
-    The stream reads through the fixture's pinned schema, like the
-    batch loader (queries.tables.T): ts is a microsecond
-    TIMESTAMP_NTZ, cast to LTZ here. The session timezone is pinned UTC
-    (config.py), so the cast is value-faithful."""
-    import os
-
-    schema = SCHEMAS["events"]
-    path = f"{sf_dir}/events.parquet"
+def _fixture_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source stream of one fixture table, read through its
+    pinned schema like the batch loader (queries.tables.T), so no
+    footer-read job runs to build it."""
+    path = f"{sf_dir}/{table}.parquet"
+    reader = spark.readStream.schema(SCHEMAS[table])
     if os.path.isdir(path):
         # multi-file table (e.g. the ~sf1 replica): stream the table
         # directory itself
-        raw = spark.readStream.schema(schema).parquet(path)
-    else:
-        # single-file fixture: file streams take a directory, so
-        # stream the fixture dir filtered to the events leaf file
-        raw = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+        return reader.parquet(path)
+    # single-file fixture: file streams take a directory, so stream
+    # the fixture dir filtered to the table's leaf file
+    return reader.option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream of the events fixture with ts as a
+    microsecond TimestampType (LTZ — watermarks reject NTZ). The
+    fixture's ts is a microsecond TIMESTAMP_NTZ; the session timezone
+    is pinned UTC (config.py), so the cast is value-faithful."""
+    return _fixture_stream(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+
+
+def run_to_memory(df: DataFrame, mode: str) -> DataFrame:
+    """Run a streaming DataFrame to completion into a memory sink and
+    return the sink's rows: a uniquely named query, an availableNow
+    trigger, then the wait for its end. The sink's temp view is
+    dropped before the return, so a long-lived session keeps no view
+    per call; the returned DataFrame's plan holds the sink itself and
+    reads the same rows on every action."""
+    spark = df.sparkSession
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def windowed_counts(
@@ -50,7 +76,15 @@ def windowed_counts(
 ) -> DataFrame:
     """Tumbling (or sliding, when ``slide`` is set) event-time window
     counts per event_type, tolerant of late data up to the watermark.
-    Streaming twin of q32_tumbling_window."""
+    Streaming twin of q32_tumbling_window.
+
+    Values are summed in exact int64 e4 units (per-row
+    floor(value*10000)): an integer sum cannot change with micro-batch
+    boundaries or state-merge order, so the result equals the batch
+    answer bit for bit. It stays int64 (not decimal like the batch
+    rollups): the group is ONE window of one type, so the sum is
+    bounded by arrival rate, not corpus size -- ~1e7/row quantized
+    needs ~1e12 rows in a single window to wrap."""
     w = (
         F.window("ts", window, slide)
         if slide
@@ -59,12 +93,17 @@ def windowed_counts(
     return (
         events.withWatermark("ts", watermark)
         .groupBy(w.alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"), F.sum("value").alias("sum_value"))
+        .agg(
+            F.count("*").alias("cnt"),
+            F.sum(F.floor(F.col("value") * 10000).cast("long")).alias(
+                "sum_value_e4"
+            ),
+        )
         .select(
             F.col("w.start").cast("long").alias("bucket_start"),
             "event_type",
             "cnt",
-            "sum_value",
+            "sum_value_e4",
         )
     )
 
@@ -100,7 +139,6 @@ def enrich_with_dimension(events: DataFrame, dim: DataFrame, on: list) -> DataFr
 def running_user_totals(
     events: DataFrame,
     watermark: str = "30 minutes",
-    quantized: bool = False,
 ) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: per-user
     running event count + value total, emitted on every update.
@@ -110,14 +148,12 @@ def running_user_totals(
     README.md:354-378): state lives in the state store, partitioned by
     key, recoverable from checkpoints — not in Python memory.
 
-    ``quantized=True`` switches the accumulator to exact int64 e4
-    units (per-row floor(value*10000), then integer sums) and emits
-    ``total_value_e4 long`` instead of ``total_value double`` —
-    integer accumulation is order-independent, so the result is
-    bit-stable against an ANSI-SQL oracle regardless of micro-batch
-    boundaries or state-merge order (the repo-wide ppm/e4
-    convention). The float default keeps the exact-sum semantics the
-    unit tests pin.
+    The accumulator is exact int64 e4 units (per-row
+    floor(value*10000), then integer sums), emitted as
+    ``total_value_e4 long``: integer accumulation is
+    order-independent, so the result is bit-stable against an
+    ANSI-SQL oracle regardless of micro-batch boundaries or
+    state-merge order (the repo-wide ppm/e4 convention).
     """
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
@@ -126,17 +162,7 @@ def running_user_totals(
         GroupStateTimeout,
     )
 
-    def update_float(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    def update_e4(key, pdfs, state: GroupState):
+    def update(key, pdfs, state: GroupState):
         n, total = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             n += len(pdf)
@@ -154,25 +180,13 @@ def running_user_totals(
             }
         )
 
-    if quantized:
-        fn, out_schema, state_schema = (
-            update_e4,
-            "user_id long, n_events long, total_value_e4 long",
-            "n long, total long",
-        )
-    else:
-        fn, out_schema, state_schema = (
-            update_float,
-            "user_id long, n_events long, total_value double",
-            "n long, total double",
-        )
     return (
         events.withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
+            update,
+            "user_id long, n_events long, total_value_e4 long",
+            "n long, total long",
             "update",
             GroupStateTimeout.NoTimeout,
         )
@@ -220,15 +234,13 @@ def purchases_with_recent_views(
     ).select("purchase_id", F.col("p_user").alias("user_id"), "view_id")
 
 
-def _add_batch_totals(batch_df: DataFrame, existing: DataFrame | None) -> DataFrame:
+def _add_batch_totals(batch_df: DataFrame, existing: DataFrame) -> DataFrame:
     """Per-user (n_events, total_value) of one micro-batch, added onto
-    the running totals in `existing` (None: there are none yet). Only
-    the batch's users come out — the sinks' upserts keep the rest."""
+    the running totals in `existing`. Only the batch's users come out
+    — the sink's merge keeps the rest."""
     delta = batch_df.groupBy("user_id").agg(
         F.count("*").alias("n_events"), F.sum("value").alias("total_value")
     )
-    if existing is None:
-        return delta
     return (
         delta.alias("d")
         .join(existing.alias("e"), "user_id", "left")
@@ -245,79 +257,16 @@ def _add_batch_totals(batch_df: DataFrame, existing: DataFrame | None) -> DataFr
     )
 
 
-def upsert_totals_sink(path: str, ledger_key: str):
-    """Build the foreachBatch sink for ``stream_upsert_user_totals``.
-
-    The additive merge alone is not idempotent under micro-batch REPLAY
-    (foreachBatch is at-least-once across restarts), so each applied
-    batch_id is recorded in a ledger file next to the store, keyed by
-    the owning query (its checkpoint dir): a redelivered (ledger_key,
-    batch_id) pair is skipped instead of double-counted. Distinct
-    queries (fresh checkpoints) keep their legitimate additive
-    semantics. The ledger write uses write-temp + os.replace (atomic on
-    POSIX) and happens only after the merge lands — a crash between
-    merge and ledger write degrades to at-least-once, the same floor a
-    transactional format (Delta/Iceberg MERGE, ROADMAP.md#1) would
-    lift.
-    """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import json  # noqa: PLC0415
-        import os  # noqa: PLC0415
-
-        from gpu_olap_engine_spark.sources import upsert_parquet  # noqa: PLC0415
-
-        ledger = path.rstrip("/") + ".batch_ledger.json"
-        applied: dict = {}
-        if os.path.exists(ledger):
-            with open(ledger) as f:
-                applied = json.load(f)
-        if applied.get(ledger_key, -1) >= batch_id:
-            return  # replayed micro-batch: already merged
-
-        spark = batch_df.sparkSession
-        if os.path.exists(path):
-            totals = _add_batch_totals(batch_df, spark.read.parquet(path))
-            upsert_parquet(spark, path, totals, ["user_id"])
-        else:
-            _add_batch_totals(batch_df, None).write.mode("overwrite").parquet(path)
-
-        applied[ledger_key] = batch_id
-        tmp = ledger + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(applied, f)
-        os.replace(tmp, ledger)
-
-    return sink
-
-
-def stream_upsert_user_totals(events: DataFrame, path: str, checkpoint_dir: str):
-    """foreachBatch incremental sink: per-micro-batch user totals
-    merged additively into a parquet store via sources.upsert_parquet
-    — the incremental-materialization pattern (stream -> continuously
-    maintained aggregate table) that completes the streaming surface's
-    sink story. Only keys touched by the batch are rewritten; untouched
-    keys stay in place (the upsert's anti-join keeps them). Replay-safe:
-    see ``upsert_totals_sink`` (per-query batch-id ledger).
-    Returns the started StreamingQuery (availableNow trigger).
-    """
-    return (
-        events.writeStream.foreachBatch(upsert_totals_sink(path, checkpoint_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def txn_upsert_totals_sink(table_path: str, ledger_key: str):
     """Transactional foreachBatch sink over the snapshot table format:
     the additive per-user merge AND the applied-batch-id ledger commit
     in ONE atomic manifest publish (table_format.merge_into app_id).
 
-    This closes the at-least-once window ``upsert_totals_sink``
-    documents: there, a crash between the parquet merge and the
-    separate ledger-file write lets a replayed batch double-count.
-    Here the crash points collapse to two cases, both safe:
+    foreachBatch is at-least-once across restarts, so a batch can be
+    redelivered. A ledger written apart from the data leaves a window
+    (a crash between the merge and the ledger write) in which a
+    replayed batch double-counts. Here the crash points collapse to
+    two cases, both safe:
     * before the manifest link publishes — NOTHING is visible (the
       txn's data files are unreferenced orphans for vacuum); the
       replayed batch applies exactly once;
@@ -383,12 +332,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the documents fixture — the ingestion
     shape of a crawler pipeline: new parquet shards appear in a
     directory and flow through curation incrementally."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    return _fixture_stream(spark, sf_dir, "documents")
 
 
 def ingest_corpus_stream(docs: DataFrame, path: str, checkpoint_dir: str):

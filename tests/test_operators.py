@@ -501,33 +501,6 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert back.count() == df.filter(F.col("o_orderstatus") == "F").count()
 
 
-def test_upsert_parquet(spark, tmp_path):
-    from gpu_olap_engine_spark.sources import upsert_parquet
-
-    path = str(tmp_path / "ds")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id long, v string"
-    ).write.parquet(path)
-    updates = spark.createDataFrame([(2, "B2"), (4, "d")], "id long, v string")
-    upsert_parquet(spark, path, updates, ["id"])
-    got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "B2", 3: "c", 4: "d"}
-
-
-def test_compact(spark, tmp_path):
-    import os
-
-    from gpu_olap_engine_spark.sources import compact
-
-    path = str(tmp_path / "many")
-    spark.range(1000).repartition(20).write.parquet(path)
-    before = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-    assert before >= 20
-    after = compact(spark, path, 2)
-    assert after <= 2
-    assert spark.read.parquet(path).count() == 1000
-
-
 def test_read_table_rejects_unknown_format(spark):
     with pytest.raises(ValueError, match="unsupported format"):
         read_table(spark, "/tmp/x", fmt="avro")
@@ -550,21 +523,6 @@ def test_ancestor_closure_chain_and_forest(spark):
     assert got == want
 
 
-def test_delete_where_rewrites_dataset(spark, tmp_path):
-    from gpu_olap_engine_spark.sources import delete_where
-
-    src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-    path = str(tmp_path / "orders_del")
-    src.write.parquet(path)
-    before = src.count()
-    expect_deleted = src.filter("o_orderstatus = 'F'").count()
-    deleted = delete_where(spark, path, "o_orderstatus = 'F'")
-    assert deleted == expect_deleted
-    back = spark.read.parquet(path)
-    assert back.count() == before - expect_deleted
-    assert back.filter("o_orderstatus = 'F'").count() == 0
-
-
 def test_ancestor_closure_rejects_cycle(spark):
     """A 2-cycle has one parent per node, so it passes the forest
     check; its jumps never run dry, and running out of rounds must
@@ -578,18 +536,6 @@ def test_ancestor_closure_rejects_cycle(spark):
     dag = spark.createDataFrame([(1, 2), (1, 3), (2, 4)], "node long, parent long")
     with pytest.raises(ValueError, match="more than one distinct parent"):
         ancestor_closure(dag, max_rounds=4).collect()
-
-
-def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):
-    from gpu_olap_engine_spark.sources import delete_where
-
-    path = str(tmp_path / "scores")
-    spark.createDataFrame(
-        [(1, 0.1), (2, None), (3, 0.9)], "k long, q double"
-    ).write.parquet(path)
-    assert delete_where(spark, path, "q < 0.5") == 1
-    got = {(r["k"], r["q"]) for r in spark.read.parquet(path).collect()}
-    assert got == {(2, None), (3, 0.9)}
 
 
 def test_pagerank_int_known_graph(spark):

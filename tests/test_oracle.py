@@ -109,6 +109,37 @@ def test_concurrent_query_callables_are_isolated(spark, duck):
             )
 
 
+def test_q76_duplicated_doc_matches_oracle(spark, tmp_path):
+    """A doc_id that appears twice, as two copies of one document:
+    each row's distinct-3-gram count is its own text's, as the
+    oracle's SELECT DISTINCT doc_id, shingle gives, not the two
+    copies' shingles counted together."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    text = "the cat sat on the mat and the cat sat on the mat again today"
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([7, 7], pa.int64()),
+            "text": [text, text],
+            "lang": ["en", "en"],
+            "source": ["web", "web"],
+            "n_chars": pa.array([len(text)] * 2, pa.int64()),
+        }),
+        tmp_path / "documents.parquet",
+    )
+    q = REGISTRY["q76_gopher_gate"]
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    assert_frames_match(
+        q.fn(spark, str(tmp_path)).toPandas(), con.sql(q.oracle).df(), q.name
+    )
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY_CASES)
 def test_rows_only_runs(spark, name):
     q = REGISTRY[name]

@@ -720,6 +720,24 @@ def test_table_format_publishes_only_through_commit():
     assert callers == ["_commit"], callers
 
 
+def test_write_stream_only_in_pipelines():
+    """Streaming queries start in ``streaming/pipelines.py`` only: a
+    registry entry or operator runs a stream through the pipelines and
+    ``run_to_memory``, which drops the sink's view, instead of a
+    ``.writeStream`` chain of its own."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "gpu_olap_engine_spark"
+    users = {
+        path.relative_to(root).as_posix()
+        for path in root.rglob("*.py")
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "writeStream"
+    }
+    assert users == {"streaming/pipelines.py"}, users
+
+
 # Plan construction cost (driver -> JVM gateway calls, ~0.3-0.5 ms
 # each): the curation chain's entries build their plans from parsed SQL
 # derives and schema-pinned reads, so building one takes a few hundred

@@ -10,6 +10,7 @@ from gpu_olap_engine_spark.queries import load_all
 from gpu_olap_engine_spark.streaming import (
     dedup_stream,
     read_events_stream,
+    run_to_memory,
     running_user_totals,
     session_counts,
     windowed_counts,
@@ -17,24 +18,11 @@ from gpu_olap_engine_spark.streaming import (
 from tests.conftest import SF_SMALL
 
 
-def run_to_memory(df, name: str, mode: str):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
-
-
 def test_windowed_counts_matches_batch(spark):
     stream = read_events_stream(spark, SF_SMALL)
-    run_to_memory(windowed_counts(stream), "wc", "complete")
     got = {
-        (r["bucket_start"], r["event_type"]): (r["cnt"], r["sum_value"])
-        for r in spark.table("wc").collect()
+        (r["bucket_start"], r["event_type"]): (r["cnt"], r["sum_value_e4"])
+        for r in run_to_memory(windowed_counts(stream), "complete").collect()
     }
     batch = load_all()["q32_tumbling_window"].fn(spark, SF_SMALL).collect()
     want = {
@@ -47,8 +35,7 @@ def test_windowed_counts_matches_batch(spark):
 
 def test_session_counts_total_events(spark):
     stream = read_events_stream(spark, SF_SMALL)
-    run_to_memory(session_counts(stream), "sess", "complete")
-    rows = spark.table("sess").collect()
+    rows = run_to_memory(session_counts(stream), "complete").collect()
     # every event lands in exactly one session
     n_events = spark.read.parquet(f"{SF_SMALL}/events.parquet").count()
     assert sum(r["n_events"] for r in rows) == n_events
@@ -65,8 +52,7 @@ def test_session_counts_total_events(spark):
 
 def test_dedup_stream_drops_duplicates(spark):
     stream = read_events_stream(spark, SF_SMALL)
-    run_to_memory(dedup_stream(stream), "dd", "append")
-    out = spark.table("dd")
+    out = run_to_memory(dedup_stream(stream), "append")
     total = spark.read.parquet(f"{SF_SMALL}/events.parquet").count()
     distinct_ids = out.select("event_id").distinct().count()
     assert out.count() == distinct_ids  # no dup ids in output
@@ -75,24 +61,24 @@ def test_dedup_stream_drops_duplicates(spark):
 
 def test_stateful_running_totals_matches_batch(spark):
     """applyInPandasWithState totals after the full stream equal the
-    plain batch aggregation."""
+    plain batch aggregation, exactly (integer e4 units)."""
     stream = read_events_stream(spark, SF_SMALL)
-    run_to_memory(running_user_totals(stream), "rt", "update")
     # single availableNow batch -> one update row per user
     got = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-        for r in spark.table("rt").collect()
+        r["user_id"]: (r["n_events"], r["total_value_e4"])
+        for r in run_to_memory(running_user_totals(stream), "update").collect()
     }
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     want = {
-        r["user_id"]: (r["n"], round(r["t"], 6))
+        r["user_id"]: (r["n"], r["t"])
         for r in ev.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("t"))
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.floor(F.col("value") * 10000).cast("long")).alias("t"),
+        )
         .collect()
     }
-    assert {k: v[0] for k, v in got.items()} == {k: v[0] for k, v in want.items()}
-    for k in want:
-        assert abs(got[k][1] - want[k][1]) < 1e-6
+    assert got == want
 
 
 def test_stream_stream_interval_join_matches_batch(spark):
@@ -102,10 +88,8 @@ def test_stream_stream_interval_join_matches_batch(spark):
     from gpu_olap_engine_spark.streaming import purchases_with_recent_views
 
     stream = read_events_stream(spark, SF_SMALL)
-    run_to_memory(purchases_with_recent_views(stream), "ssj", "append")
-    got = {
-        (r["purchase_id"], r["view_id"]) for r in spark.table("ssj").collect()
-    }
+    joined = run_to_memory(purchases_with_recent_views(stream), "append")
+    got = {(r["purchase_id"], r["view_id"]) for r in joined.collect()}
     from gpu_olap_engine_spark.queries.tables import T
 
     ev = T(spark, SF_SMALL, "events")
@@ -142,99 +126,25 @@ def test_stream_static_join_enriches(spark):
         spark.read.parquet(f"{SF_SMALL}/customer.parquet")
         .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
     )
-    run_to_memory(
+    out = run_to_memory(
         enrich_with_dimension(stream, dim, ["user_id"]).select(
             "event_id", "user_id", "c_mktsegment"
         ),
-        "enriched",
         "append",
     )
-    out = spark.table("enriched")
     total = spark.read.parquet(f"{SF_SMALL}/events.parquet").count()
     assert out.count() == total
     assert out.filter(F.col("c_mktsegment").isNull()).count() == 0
 
 
-def test_stream_upsert_sink_accumulates(spark, tmp_path):
-    """foreachBatch upsert sink: after one availableNow pass the store
-    equals the batch aggregate; after a second pass (fresh checkpoint,
-    same input) every total exactly doubles — proving the additive
-    merge touches existing keys correctly."""
-    from gpu_olap_engine_spark.streaming import stream_upsert_user_totals
-
-    store = str(tmp_path / "totals")
-    want = {
-        r["user_id"]: (r["n"], round(r["t"], 6))
-        for r in spark.read.parquet(f"{SF_SMALL}/events.parquet")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("t"))
-        .collect()
-    }
-    for pass_no in (1, 2):
-        stream = read_events_stream(spark, SF_SMALL)
-        q = stream_upsert_user_totals(
-            stream, store, str(tmp_path / f"ckpt{pass_no}")
-        )
-        q.awaitTermination(120)
-        got = {
-            r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-            for r in spark.read.parquet(store).collect()
-        }
-        assert set(got) == set(want)
-        for k, (n, t) in want.items():
-            assert got[k][0] == pass_no * n
-            assert abs(got[k][1] - pass_no * t) < 1e-6
-
-
-def test_stream_upsert_sink_idempotent_under_replay(spark, tmp_path):
-    """foreachBatch is at-least-once across restarts: the same
-    (query, batch_id) can be redelivered. The sink's batch-id ledger
-    must make the redelivery a no-op, while a NEW batch_id and a NEW
-    query (fresh checkpoint key) still merge additively."""
-    from gpu_olap_engine_spark.streaming import upsert_totals_sink
-
-    store = str(tmp_path / "totals")
-    events = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    want = {
-        r["user_id"]: (r["n"], round(r["t"], 6))
-        for r in events.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("t"))
-        .collect()
-    }
-
-    def snapshot():
-        return {
-            r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-            for r in spark.read.parquet(store).collect()
-        }
-
-    sink = upsert_totals_sink(store, "ckptA")
-    sink(events, 0)
-    after_first = snapshot()
-    assert {k: v[0] for k, v in after_first.items()} == {
-        k: v[0] for k, v in want.items()
-    }
-    sink(events, 0)  # replayed micro-batch: must be skipped
-    assert snapshot() == after_first
-    sink(events, 1)  # genuinely new batch: merges additively
-    doubled = snapshot()
-    assert all(doubled[k][0] == 2 * want[k][0] for k in want)
-    # a different query (fresh checkpoint) has its own ledger row
-    upsert_totals_sink(store, "ckptB")(events, 0)
-    assert all(snapshot()[k][0] == 3 * want[k][0] for k in want)
-
-
 def test_sliding_window_covers_each_event_twice(spark):
     stream = read_events_stream(spark, SF_SMALL)
-    run_to_memory(
+    out = run_to_memory(
         windowed_counts(stream, window="20 minutes", slide="10 minutes"),
-        "sw",
         "complete",
     )
     total = spark.read.parquet(f"{SF_SMALL}/events.parquet").count()
-    emitted = (
-        spark.table("sw").agg(F.sum("cnt").alias("s")).collect()[0]["s"]
-    )
+    emitted = out.agg(F.sum("cnt").alias("s")).collect()[0]["s"]
     assert emitted == 2 * total  # every event belongs to exactly 2 windows
 
 
@@ -242,36 +152,39 @@ def test_corpus_ingest_stream_matches_batch_dedup(spark, tmp_path):
     """Streaming corpus ingestion (fingerprint dedup on arrival) must
     land exactly the batch-distinct row count, and a second
     availableNow run over the same input must add nothing (checkpoint
-    makes the ingest idempotent)."""
-    from pyspark.sql import functions as F
-
+    makes the ingest idempotent). Two inputs: the single-file fixture
+    and the same documents as a multi-file table directory (the
+    layout of the ~sf1/~sf10 replicas)."""
     from gpu_olap_engine_spark.operators.dedup import base_hash
     from gpu_olap_engine_spark.streaming.pipelines import (
         ingest_corpus_stream,
         read_documents_stream,
     )
 
-    sf = "/root/testdata/sf0.001"
-    out = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-    docs = read_documents_stream(spark, sf)
-    q = ingest_corpus_stream(docs, out, ckpt).start()
-    q.awaitTermination(120)
-
-    batch = spark.read.parquet(f"{sf}/documents.parquet")
-    want = (
-        batch.select(base_hash(F.lower(F.trim(F.col("text")))).alias("fp"))
-        .distinct()
-        .count()
+    multi = str(tmp_path / "multi")
+    spark.read.parquet(f"{SF_SMALL}/documents.parquet").repartition(3).write.parquet(
+        f"{multi}/documents.parquet"
     )
-    got = spark.read.parquet(out)
-    assert got.count() == want
-    assert got.select("fingerprint").distinct().count() == want
+    for i, sf in enumerate((SF_SMALL, multi)):
+        out, ckpt = str(tmp_path / f"corpus{i}"), str(tmp_path / f"ckpt{i}")
+        docs = read_documents_stream(spark, sf)
+        q = ingest_corpus_stream(docs, out, ckpt).start()
+        q.awaitTermination(120)
 
-    # replay: same input, same checkpoint -> no new rows
-    q2 = ingest_corpus_stream(read_documents_stream(spark, sf), out, ckpt).start()
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == want
+        batch = spark.read.parquet(f"{sf}/documents.parquet")
+        want = (
+            batch.select(base_hash(F.lower(F.trim(F.col("text")))).alias("fp"))
+            .distinct()
+            .count()
+        )
+        got = spark.read.parquet(out)
+        assert got.count() == want
+        assert got.select("fingerprint").distinct().count() == want
+
+        # replay: same input, same checkpoint -> no new rows
+        q2 = ingest_corpus_stream(read_documents_stream(spark, sf), out, ckpt).start()
+        q2.awaitTermination(120)
+        assert spark.read.parquet(out).count() == want
 
 
 def test_txn_upsert_sink_exactly_once_accumulates(spark, tmp_path):
@@ -448,3 +361,32 @@ def test_session_window_gap_boundary(spark, tmp_path):
     odf = duck.sql(oracle).df()
     o_per_user = odf.groupby("user_id").size().to_dict()
     assert o_per_user == {1: 1, 2: 1, 3: 2}
+
+
+STREAM_ENTRIES = (
+    "stream_windowed_counts",
+    "stream_session_windows",
+    "stream_interval_join",
+    "stream_dedup_keys",
+    "stream_user_totals",
+)
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_stream_entries_leave_no_view(spark):
+    """A long-lived session keeps no state per streaming call: running
+    every registry entry that executes a stream leaves no memory-sink
+    temp view behind, and each result still reads the same rows on a
+    second action."""
+    from collections import Counter
+
+    before = _temp_views(spark)
+    for name in STREAM_ENTRIES:
+        df = load_all()[name].fn(spark, SF_SMALL)
+        first = Counter(df.collect())
+        assert first, name
+        assert Counter(df.collect()) == first, name
+    assert _temp_views(spark) == before

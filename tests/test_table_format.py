@@ -181,8 +181,8 @@ def test_commit_conflict_detected_and_retry_succeeds(spark, tmp_path):
 def test_app_id_gives_exactly_once_merge(spark, tmp_path):
     """The (ledger_key, batch_id) pair rides in the SAME manifest as
     the data: a redelivered batch is skipped, so replay cannot
-    double-apply — the atomicity upsert_parquet's separate ledger file
-    could not provide."""
+    double-apply — the atomicity a ledger file written apart from the
+    data could not provide."""
     path = _mk(spark, tmp_path, n=10)
     u = spark.createDataFrame([(3, -3)], "k long, v long")
     s1 = tf.merge_into(spark, path, u, ["k"], app_id=("qA", 0))
