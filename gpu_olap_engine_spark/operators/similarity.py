@@ -34,6 +34,8 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -856,7 +858,7 @@ def _bound_hits(wa32, wb32, tl, s: int, e: int) -> tuple:
     return np.nonzero(b)
 
 
-def _mask_words(pdf: pd.DataFrame) -> tuple:
+def _mask_words(rb: pa.RecordBatch) -> tuple:
     """The minimal-shared-key gate's per-row key-set bitmasks (two
     uint64 words covering blocking keys 0..127), as shipped by
     _near_dup_keyed. Scalar longs deliberately — an array<smallint>
@@ -866,16 +868,16 @@ def _mask_words(pdf: pd.DataFrame) -> tuple:
     NULL masks mean some key >= 128 (vector dim > 64): the gate's
     single-emission guarantee cannot hold, so fail loudly rather
     than emit silently-duplicated or dropped pairs."""
-    lo, hi = pdf["mlo"].to_numpy(), pdf["mhi"].to_numpy()
-    if lo.dtype != np.int64 or hi.dtype != np.int64:  # NULLs present
+    lo, hi = rb.column("mlo"), rb.column("mhi")
+    if lo.null_count or hi.null_count:
         raise ValueError(
             "minimal-shared-key gating needs blocking keys < 128 "
             "(vector dim <= 64); drop the mlo/mhi columns from the "
             "keyed relation so gram_pairs takes the terminal-distinct "
             "path (near_dup_pairs does this automatically when the "
-            "corpus' first vector is wider than 64 dims)"
+            "corpus is wider than 64 dims)"
         )
-    return lo.view(np.uint64), hi.view(np.uint64)
+    return lo.to_numpy().view(np.uint64), hi.to_numpy().view(np.uint64)
 
 
 def _mask_gate(
@@ -912,13 +914,129 @@ class _GramSide(NamedTuple):
     masks: tuple | None
 
 
-def _gram_side(pdf: pd.DataFrame, gated: bool) -> _GramSide:
-    q32 = np.stack(pdf["qvec"].to_numpy()).astype(np.float32)
+def _gram_side(rows: dict, gated: bool, sel=None) -> _GramSide:
+    """The Gram side of a group's rows (all of them, or those the bool
+    mask `sel` picks), from the numpy columns _arrow_rows decodes."""
+    def pick(c):
+        return rows[c] if sel is None else rows[c][sel]
+
+    q32 = pick("qvec")
+    if q32.dtype == object:  # ragged batch: a length mix raises here
+        q32 = np.stack(q32)
+    q32 = q32.astype(np.float32, copy=False)
     q = q32.astype(np.float64)  # exact: integer-valued < 2^24
     nrm = np.sqrt((q * q).sum(axis=1))  # exact integer sums
     return _GramSide(
-        pdf["vid"].to_numpy(), q, nrm, _unit_rows_f32(q32, nrm),
-        _mask_words(pdf) if gated else None,
+        pick("vid"), q, nrm, _unit_rows_f32(q32, nrm),
+        (pick("mlo"), pick("mhi")) if gated else None,
+    )
+
+
+def _ragged(vectors) -> np.ndarray:
+    """One vector per row, copied into an object array: the vector
+    column of rows whose vectors differ in length."""
+    out = np.empty(len(vectors), dtype=object)
+    for i, v in enumerate(vectors):
+        out[i] = np.array(v)
+    return out
+
+
+def _arrow_rows(rb: pa.RecordBatch, gated: bool) -> dict:
+    """One Arrow batch as row-aligned numpy columns: every scalar
+    column as is, the gate's mask words when gated (_mask_words), and
+    `qvec` as an (n, dim) view of its flat values — or, when the
+    batch's vectors differ in length, an object array of rows."""
+    rows = {
+        c: rb.column(c).to_numpy(zero_copy_only=False)
+        for c in rb.schema.names if c not in ("qvec", "mlo", "mhi")
+    }
+    if gated:
+        rows["mlo"], rows["mhi"] = _mask_words(rb)
+    qv = rb.column("qvec")
+    flat = qv.flatten().to_numpy(zero_copy_only=False)
+    lens = pc.list_value_length(qv).fill_null(0).to_numpy()
+    if (lens == lens[0]).all():
+        rows["qvec"] = flat.reshape(len(lens), lens[0])
+    else:
+        rows["qvec"] = _ragged(np.split(flat, np.cumsum(lens)[:-1]))
+    return rows
+
+
+def _concat_rows(a: dict, b: dict) -> dict:
+    out = {c: np.concatenate([x, b[c]]) for c, x in a.items() if c != "qvec"}
+    qa, qb = a["qvec"], b["qvec"]
+    if qa.shape[1:] != qb.shape[1:] or qa.dtype != qb.dtype:
+        qa, qb = _ragged(qa), _ragged(qb)  # vectors of two widths
+    out["qvec"] = np.concatenate([qa, qb])
+    return out
+
+
+def _sorted_groups(batches, keys: list, gated: bool):
+    """Cut a partition's key-sorted Arrow batches into groups of equal
+    `keys`, yielding each group's numpy rows. The last group of a batch
+    is copied out and carried into the next batch, so memory is one
+    batch plus the largest group."""
+    carry = None
+    for rb in batches:
+        n = rb.num_rows
+        if n == 0:
+            continue
+        rows = _arrow_rows(rb, gated)
+        change = np.zeros(n - 1, dtype=bool)
+        for c in keys:
+            change |= rows[c][1:] != rows[c][:-1]
+        bounds = [0, *(np.flatnonzero(change) + 1).tolist(), n]
+        groups = [
+            {c: v[s:e] for c, v in rows.items()}
+            for s, e in zip(bounds, bounds[1:])
+        ]
+        if carry is not None:
+            if all(carry[c][0] == groups[0][c][0] for c in keys):
+                groups[0] = _concat_rows(carry, groups[0])
+            else:
+                yield carry
+        yield from groups[:-1]
+        carry = {c: v.copy() for c, v in groups[-1].items()}
+    if carry is not None:
+        yield carry
+
+
+def _gram_walk(df: DataFrame, keys: list, names: tuple, verify) -> DataFrame:
+    """Run `verify` on every `keys` group of `df` — a generator of
+    (ids_a, ids_b, cosine) arrays per group — in one Arrow pass per
+    partition: rows shuffle on the keys, sort within partitions, and
+    one mapInArrow call walks each partition's groups in numpy
+    (_sorted_groups). Returns (names[0] long, names[1] long, cosine
+    double), emitted in batches of about 64k rows."""
+    gated = "mlo" in df.columns
+    schema = pa.schema(
+        [(names[0], pa.int64()), (names[1], pa.int64()), ("cosine", pa.float64())]
+    )
+
+    def emit(hits):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.concatenate(col), type=f.type)
+             for col, f in zip(zip(*hits), schema)],
+            schema=schema,
+        )
+
+    def walk(batches):
+        hits, held = [], 0
+        for rows in _sorted_groups(batches, keys, gated):
+            for h in verify(rows):
+                if len(h[2]):
+                    hits.append(h)
+                    held += len(h[2])
+            if held >= 65536:
+                yield emit(hits)
+                hits, held = [], 0
+        if hits:
+            yield emit(hits)
+
+    return (
+        df.repartition(*keys)
+        .sortWithinPartitions(*keys)
+        .mapInArrow(walk, f"{names[0]} long, {names[1]} long, cosine double")
     )
 
 
@@ -962,7 +1080,8 @@ def near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs above a threshold:
     inverted-index blocking on top-m signed dims (top_dim_keys), then
-    per-BUCKET exact matmul verification via applyInPandas.
+    per-BUCKET exact matmul verification in one mapInArrow pass per
+    partition (_gram_walk).
 
     Result = {(a, b): a, b share >= 1 top-m signed dim AND
     cosine(a, b) >= threshold}, a < b.
@@ -1009,8 +1128,8 @@ def near_dup_pairs(
     into a single Python worker. Buckets larger than ``max_bucket``
     rows are now TILED: rows hash-partition (xxhash64 of the id, so
     deterministic) into ``ceil(size / chunk)`` chunks and every
-    unordered chunk pair (ci <= cj) becomes its own applyInPandas
-    group, so per-task rows are bounded by ~2*chunk in expectation
+    unordered chunk pair (ci <= cj) becomes its own verify group,
+    so per-group rows are bounded by ~2*chunk in expectation
     whatever the bucket size; the tiling replicates each hot-bucket
     row nchunks times — the unavoidable data-movement cost of a
     bounded-memory quadratic verify, paid ONLY by hot buckets
@@ -1100,27 +1219,12 @@ def gram_pairs(
     gated = "mlo" in keyed.columns
     grouped = _blocked_groups(persist(keyed), max_bucket, chunk)
 
-    empty = pd.DataFrame(
-        {"id_a": pd.Series([], dtype="int64"),
-         "id_b": pd.Series([], dtype="int64"),
-         "cosine": pd.Series([], dtype="float64")}
-    )
-
-    def _emit(ia, jb, cos):
-        lo, hi = np.minimum(ia, jb), np.maximum(ia, jb)
-        good = lo != hi  # a vector appears once per bucket; belt+braces
-        return pd.DataFrame(
-            {"id_a": lo[good], "id_b": hi[good], "cosine": cos[good]}
-        )
-
-    # unannotated on purpose: hints on only some parameters make
-    # applyInPandas warn that it cannot infer the eval type
-    def verify(key, pdf):
-        bkey, gi, gj = key
+    def verify(rows):
+        bkey, gi, gj = rows["bkey"][0], rows["gi"][0], rows["gj"][0]
         if gi == gj:  # within-chunk: strict-upper-triangle pairs
-            if len(pdf) < 2:
-                return empty
-            a = _gram_side(pdf, gated)
+            if len(rows["vid"]) < 2:
+                return
+            a = _gram_side(rows, gated)
             tl = np.float32(threshold) - _f32_margin(a.q.shape[1], threshold)
             hits = []
             for s in range(0, len(a.ids), block_rows):
@@ -1135,18 +1239,19 @@ def gram_pairs(
                 keep = c > r  # local coords: col > row <=> global too
                 hits.append(_exact_hits(bkey, a, a, r[keep] + s, c[keep] + s, threshold))
         else:  # cross-chunk: full rectangle, each pair in ONE group
-            pa, pb = pdf[pdf["ck"] == gi], pdf[pdf["ck"] == gj]
-            if len(pa) == 0 or len(pb) == 0:
-                return empty
+            in_a, in_b = rows["ck"] == gi, rows["ck"] == gj
+            if not in_a.any() or not in_b.any():
+                return
             hits = _gram_rect(
-                bkey, _gram_side(pa, gated), _gram_side(pb, gated), threshold, block_rows
+                bkey, _gram_side(rows, gated, in_a), _gram_side(rows, gated, in_b),
+                threshold, block_rows,
             )
-        out = [_emit(ia, jb, cos) for ia, jb, cos in hits if len(cos)]
-        return pd.concat(out, ignore_index=True) if out else empty
+        for ia, jb, cos in hits:
+            lo, hi = np.minimum(ia, jb), np.maximum(ia, jb)
+            good = lo != hi  # a vector appears once per bucket; belt+braces
+            yield lo[good], hi[good], cos[good]
 
-    result = grouped.groupBy("bkey", "gi", "gj").applyInPandas(
-        verify, "id_a long, id_b long, cosine double"
-    )
+    result = _gram_walk(grouped, ["bkey", "gi", "gj"], ("id_a", "id_b"), verify)
     return result if gated or assume_unique else result.distinct()
 
 
@@ -1210,32 +1315,15 @@ def gram_cross_pairs(
     )
     both = big.unionByName(small)
 
-    empty = pd.DataFrame(
-        {"id_big": pd.Series([], dtype="int64"),
-         "id_small": pd.Series([], dtype="int64"),
-         "cosine": pd.Series([], dtype="float64")}
-    )
+    def verify(rows):
+        big, small = rows["side"] == 0, rows["side"] == 1
+        if big.any() and small.any():
+            yield from _gram_rect(
+                rows["bkey"][0], _gram_side(rows, gated, big),
+                _gram_side(rows, gated, small), threshold, block_rows,
+            )
 
-    # unannotated on purpose: hints on only some parameters make
-    # applyInPandas warn that it cannot infer the eval type
-    def verify(key, pdf):
-        pa, pb = pdf[pdf["side"] == 0], pdf[pdf["side"] == 1]
-        if len(pa) == 0 or len(pb) == 0:
-            return empty
-        hits = _gram_rect(
-            key[0], _gram_side(pa, gated), _gram_side(pb, gated), threshold, block_rows
-        )
-        out = [
-            pd.DataFrame({"id_big": ia, "id_small": jb, "cosine": cos})
-            for ia, jb, cos in hits if len(cos)
-        ]
-        return pd.concat(out, ignore_index=True) if out else empty
-
-    result = (
-        both
-        .groupBy("bkey", "ci")
-        .applyInPandas(verify, "id_big long, id_small long, cosine double")
-    )
+    result = _gram_walk(both, ["bkey", "ci"], ("id_big", "id_small"), verify)
     return result if gated else result.distinct()
 
 

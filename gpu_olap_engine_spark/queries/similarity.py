@@ -199,7 +199,8 @@ def sim_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (>= 0.45): inverted-index
     blocking on each vector's top-10 signed dims (prefix-filtering;
     142/144 recall at sf0.1 vs 113/144 at top-6), then per-bucket
-    Gram verification (applyInPandas) — vectors move once per key,
+    Gram verification (one mapInArrow pass per partition that walks
+    its key-sorted groups in numpy) — vectors move once per key,
     the quadratic verify runs in-core. r11 kernel: a float32 bound
     scan with a proven-superset margin prices the Gram cells at BLAS
     rate, survivors alone pay the exact integer dot + IEEE division,

@@ -69,15 +69,35 @@ def get_spark(
         "SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     )
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in config.spark_confs().items():
+    for k, v in builder_confs(config, master, coretype).items():
         builder = builder.config(k, v)
-    if coretype:  # reach executor-spawned Python workers on clusters
-        builder = builder.config(
-            "spark.executorEnv.OPENBLAS_CORETYPE", coretype
-        )
     spark = builder.getOrCreate()
     apply_runtime_confs(spark, config)
     return spark
+
+
+def builder_confs(
+    config: EngineConfig, master: str, coretype: str | None = None
+) -> dict[str, str]:
+    """Every conf get_spark puts on the session builder: the engine's
+    confs, the OpenBLAS coretype for executor-spawned Python workers
+    (the channel that reaches them on clusters), and, for local
+    masters only, the engine's Python worker daemon (worker_daemon).
+    The daemon runs from the package's parent directory, appended to
+    the workers' PYTHONPATH, so it imports whatever the cwd is. Cluster
+    masters keep Spark's daemon: a --py-files package reaches the
+    workers' path only after the daemon has started."""
+    confs = config.spark_confs()
+    if coretype:
+        confs["spark.executorEnv.OPENBLAS_CORETYPE"] = coretype
+    if master.startswith("local"):
+        confs.setdefault(
+            "spark.python.daemon.module", f"{__package__}.worker_daemon"
+        )
+        home = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        key = "spark.executorEnv.PYTHONPATH"
+        confs[key] = os.pathsep.join(p for p in (confs.get(key), home) if p)
+    return confs
 
 
 def apply_runtime_confs(spark: SparkSession, config: EngineConfig | None = None) -> None:
